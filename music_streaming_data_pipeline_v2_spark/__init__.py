@@ -6,8 +6,9 @@ re-expressed here as a library of composable DataFrame transforms plus a
 Structured Streaming ingestion layer:
 
 - ``schemas``    — explicit StructType contracts (reference §1.2 types)
-- ``session``    — SparkSession factory tuned for local[32] testing and
-                   100 TB-cluster defaults (AQE, partitioned writes)
+- ``session``    — SparkSession factory: ``local[$SPARK_GRAFT_CPUS]``
+                   for testing, 100 TB-cluster defaults (AQE,
+                   partitioned writes)
 - ``io``         — schema'd sources/sinks, manifest-based incremental scan
 - ``operators``  — validation (coerce-and-drop), enrichment joins,
                    aggregation, top-K windows, unpivot/KV reshape, dedup,

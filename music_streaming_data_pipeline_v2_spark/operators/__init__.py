@@ -6,7 +6,7 @@ from .validation import (
     validate_users,
 )
 from .enrich import enrich_streams
-from .aggregates import daily_genre_kpis, plays_per_item, plays_per_group
+from .aggregates import daily_genre_kpis, plays_per_item
 from .topk import top_k_per_group
 from .reshape import unpivot_kpis
 from . import (  # noqa: F401

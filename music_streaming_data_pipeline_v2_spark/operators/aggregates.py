@@ -9,10 +9,8 @@ Spark-first decisions:
 - All built-in aggregate functions → partial (map-side) aggregation and
   whole-stage codegen for free; one shuffle on the group key.
 - ``countDistinct`` is exact (two-phase expand) to match the reference;
-  ``approx_distinct=True`` swaps in HLL++ (``approx_count_distinct``)
-  for the 100 TB path where the expand's extra shuffle volume dominates.
-- The generic functions are column-parameterized so the same operator
-  serves the music schema and the driver test tables.
+  the HLL++ estimate (``approx_count_distinct``) is the separate
+  ``approx_distinct_users`` query (plans/driver_queries.py).
 - The reference recomputes the genre-day count twice (A1 listen_count and
   A4 total_plays); callers here reuse one ``daily_genre_kpis`` output.
 """
@@ -23,32 +21,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def daily_genre_kpis(
-    enriched: DataFrame,
-    group_col: str = "track_genre",
-    date_col: str = "date",
-    user_col: str = "user_id",
-    measure_col: str = "duration_ms",
-    approx_distinct: bool = False,
-    approx_rsd: float = 0.01,
-) -> DataFrame:
+def daily_genre_kpis(enriched: DataFrame) -> DataFrame:
     """A1 + A2 + A5 (music-streaming-transform.py:100-106).
 
-    Output schema matches schemas.GENRE_KPIS (with generic names mapped
-    back to the reference's when called on the music schema).
+    Output schema matches schemas.GENRE_KPIS.
     """
-    distinct = (
-        F.approx_count_distinct(user_col, approx_rsd)
-        if approx_distinct
-        else F.countDistinct(user_col)
-    )
     return (
-        enriched.groupBy(group_col, date_col)
+        enriched.groupBy("track_genre", "date")
         .agg(
             F.count("*").alias("listen_count"),
-            distinct.alias("unique_listeners"),
-            F.sum(measure_col).alias("total_listening_time_ms"),
-            F.avg(measure_col).alias("avg_listening_time_ms"),
+            F.countDistinct("user_id").alias("unique_listeners"),
+            F.sum("duration_ms").alias("total_listening_time_ms"),
+            F.avg("duration_ms").alias("avg_listening_time_ms"),
         )
         .withColumn(
             "avg_listening_time_per_user",
@@ -57,18 +41,10 @@ def daily_genre_kpis(
     )
 
 
-def plays_per_item(
-    enriched: DataFrame,
-    group_cols: list[str],
-    count_alias: str = "play_count",
-) -> DataFrame:
+def plays_per_item(enriched: DataFrame, group_cols: list[str]) -> DataFrame:
     """A3/A4: count(*) at an arbitrary grain
     (music-streaming-transform.py:121-123, 145-147)."""
-    return enriched.groupBy(*group_cols).agg(F.count("*").alias(count_alias))
-
-
-# Alias matching the coarser-grain use (A4).
-plays_per_group = plays_per_item
+    return enriched.groupBy(*group_cols).agg(F.count("*").alias("play_count"))
 
 
 def fixed_width_histogram(

@@ -15,9 +15,6 @@ Spark-first decisions:
   the hint and let sort-merge + AQE skew handling take over.
 - INNER join semantics preserved: stream events with unknown track/user
   are silently dropped, exactly like the reference (SURVEY.md §2.3 note).
-  ``dead_letter=True`` additionally returns the dropped rows (left-anti)
-  for quarantine — a capability the reference lacks but the same scan
-  feeds both outputs.
 - The ``date`` column (to_date(listen_time)) is the daily tumbling-window
   key (X2) and the partition column for output pruning (P6/P11).
 """
@@ -28,21 +25,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def add_event_date(df: DataFrame, ts_col: str = "listen_time") -> DataFrame:
-    """P11: daily grain column (music-streaming-transform.py:79)."""
-    return df.withColumn("date", F.to_date(F.col(ts_col)))
-
-
 def enrich_streams(
     streams: DataFrame,
     songs: DataFrame,
     users: DataFrame,
     process_date: str | None = None,
-    dead_letter: bool = False,
-) -> DataFrame | tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """J1 + J2 + P11 (+ optional P6 date filter).
 
-    Mirrors music-streaming-transform.py:59-92 with broadcast dims.
+    Mirrors music-streaming-transform.py:59-92 with broadcast dims; the
+    P11 daily grain is ``to_date(listen_time)`` (line 79).
     ``process_date`` reproduces the PROCESS_DATE recompute-one-day filter
     (music-streaming-transform.py:82-85); Catalyst pushes it below the
     joins to the streams scan.
@@ -55,19 +47,8 @@ def enrich_streams(
     enriched = (
         streams.join(F.broadcast(songs_dim), on="track_id", how="inner")
         .join(F.broadcast(users_dim), on="user_id", how="inner")
-        .transform(add_event_date)
+        .withColumn("date", F.to_date("listen_time"))
     )
     if process_date is not None:
         enriched = enriched.filter(F.col("date") == F.lit(process_date).cast("date"))
-
-    if not dead_letter:
-        return enriched
-
-    unknown = streams.join(
-        F.broadcast(songs_dim.select("track_id")), "track_id", "left_anti"
-    ).unionByName(
-        streams.join(F.broadcast(songs_dim.select("track_id")), "track_id", "inner")
-        .join(F.broadcast(users_dim.select("user_id")), "user_id", "left_anti")
-        .select(streams.columns)
-    )
-    return enriched, unknown
+    return enriched

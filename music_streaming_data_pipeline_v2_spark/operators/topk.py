@@ -28,19 +28,15 @@ def top_k_per_group(
     order_col: str,
     k: int,
     tie_break_cols: list[str] | None = None,
-    rank_alias: str = "rank",
-    descending: bool = True,
 ) -> DataFrame:
-    """Rank rows within each partition and keep the top K."""
-    ordering: list[Column] = [
-        F.desc(order_col) if descending else F.asc(order_col)
-    ]
+    """Rank rows within each partition by ``order_col`` descending,
+    ties by ``tie_break_cols`` ascending, and keep the top K as
+    ``rank`` 1..K."""
+    ordering: list[Column] = [F.desc(order_col)]
     for c in tie_break_cols or []:
         ordering.append(F.asc(c))
     w = Window.partitionBy(*partition_cols).orderBy(*ordering)
-    return df.withColumn(rank_alias, F.row_number().over(w)).filter(
-        F.col(rank_alias) <= k
-    )
+    return df.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def skyline_2d(

@@ -36,21 +36,19 @@ class MusicKpiOutputs:
     kv: DataFrame
 
 
-def run_music_pipeline(
-    streams: DataFrame,
-    songs: DataFrame,
-    users: DataFrame,
-    process_date: str | None = None,
-    cache_enriched: bool = True,
-    approx_distinct: bool = False,
-) -> MusicKpiOutputs:
-    """Build the full KPI plan; nothing is executed until an action."""
-    enriched = enrich_streams(streams, songs, users, process_date=process_date)
-    if cache_enriched:
-        enriched = enriched.cache()
+def rank_and_project_kv(
+    enriched: DataFrame, genre_kpis: DataFrame
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """W1 + W2 + S9: ``(top_songs, top_genres, kv)`` from an enriched
+    frame and its genre-day KPIs.
 
-    genre_kpis = daily_genre_kpis(enriched, approx_distinct=approx_distinct)
-
+    The one definition of the KPI→rank→KV plan, shared by the batch
+    recompute (``run_music_pipeline``) and the per-drain recompute
+    (``streaming.pipeline.run_incremental_pipeline``), which passes its
+    read-back of the committed KPI partitions as ``genre_kpis``.
+    ``enriched`` needs ``track_genre``, ``date``, ``track_id``,
+    ``track_name`` and ``artists``.
+    """
     song_counts = plays_per_item(
         enriched, ["track_genre", "date", "track_id", "track_name", "artists"]
     )
@@ -77,13 +75,25 @@ def run_music_pipeline(
         tie_break_cols=["track_genre"],
     ).select("date", "rank", "track_genre", "total_plays")
 
-    kv = build_kv_table(genre_kpis, top_songs, top_genres)
+    return top_songs, top_genres, build_kv_table(genre_kpis, top_songs, top_genres)
+
+
+def run_music_pipeline(
+    streams: DataFrame,
+    songs: DataFrame,
+    users: DataFrame,
+    cache_enriched: bool = True,
+) -> MusicKpiOutputs:
+    """Build the full KPI plan; nothing is executed until an action."""
+    enriched = enrich_streams(streams, songs, users)
+    if cache_enriched:
+        enriched = enriched.cache()
+    genre_kpis = daily_genre_kpis(enriched)
+    top_songs, top_genres, kv = rank_and_project_kv(enriched, genre_kpis)
     return MusicKpiOutputs(enriched, genre_kpis, top_songs, top_genres, kv)
 
 
-def write_music_outputs(
-    outputs: MusicKpiOutputs, base_dir: str, partition_by_date: bool = True
-) -> None:
+def write_music_outputs(outputs: MusicKpiOutputs, base_dir: str) -> None:
     """Materialize all four result tables in one pass.
 
     The enrichment subplan is shared (cached by run_music_pipeline), so
@@ -96,12 +106,10 @@ def write_music_outputs(
     """
     import os
 
-    part = ["date"] if partition_by_date else None
+    part = ["date"]
     write_partitioned(outputs.genre_kpis, os.path.join(base_dir, "genre_kpis"), part)
     write_partitioned(outputs.top_songs, os.path.join(base_dir, "top_songs"), part)
     write_partitioned(outputs.top_genres, os.path.join(base_dir, "top_genres"), part)
-    kv = outputs.kv.sortWithinPartitions("pk", "sk")
-    writer = kv.write.mode("overwrite")
-    if partition_by_date:
-        writer = writer.partitionBy("date")
-    writer.parquet(os.path.join(base_dir, "kv"))
+    outputs.kv.sortWithinPartitions("pk", "sk").write.mode("overwrite").partitionBy(
+        "date"
+    ).parquet(os.path.join(base_dir, "kv"))

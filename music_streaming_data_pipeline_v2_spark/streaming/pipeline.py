@@ -19,12 +19,11 @@ maps onto a built-in Structured Streaming facility:
 | batched KV writes (S9)                  | ``foreachBatch`` → KV sink |
 
 At scale: the checkpoint is O(processed-files) metadata, not data; with
-millions of files move to ``maxFilesPerTrigger`` batches and compact
-inputs upstream. State in the windowed aggregation is bounded by the
-watermark (1 day + late allowance), so executors hold at most ~2 days
-of per-(genre,day) partial aggregates — small — while the
-recompute-a-day ``foreachBatch`` path keeps correctness for arbitrarily
-late data, mirroring the reference's model.
+millions of files compact inputs upstream. State in the windowed
+aggregation is bounded by the watermark (1 day + late allowance), so
+executors hold at most ~2 days of per-(genre,day) partial aggregates —
+small — while the recompute-a-day ``foreachBatch`` path keeps
+correctness for arbitrarily late data, mirroring the reference's model.
 """
 
 from __future__ import annotations
@@ -36,38 +35,40 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.scalar import coerce_timestamp
+from ..operators.aggregates import daily_genre_kpis
 from ..operators.validation import validate_streams
+from ..plans.music import rank_and_project_kv
+
+# the reference's stream-file name filter (P8) and raw CSV layout
+STREAM_GLOB = "*stream*.csv"
+RAW_STREAM_SCHEMA = T.StructType(
+    [
+        T.StructField("user_id", T.StringType()),
+        T.StructField("track_id", T.StringType()),
+        T.StructField("listen_time", T.StringType()),
+    ]
+)
 
 
 def stream_file_source(
     spark: SparkSession,
     path: str,
     schema: T.StructType,
-    fmt: str = "csv",
-    path_glob: str | None = None,
     archive_dir: str | None = None,
-    max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """S6/S7/S10/P8: incremental file discovery with exactly-once
-    semantics and post-success archival, all engine-managed.
-
-    ``path_glob`` defaults to ``*stream*.{fmt}`` — tied to the format,
-    because a format-independent ``*.csv`` default would make any
-    non-csv source silently match zero files and stream nothing
-    forever. The csv-only ``header`` option is likewise applied only
-    for csv."""
-    if path_glob is None:
-        path_glob = f"*stream*.{fmt}"
-    reader = spark.readStream.schema(schema).option("pathGlobFilter", path_glob)
-    if fmt == "csv":
-        reader = reader.option("header", "true")
+    """S6/S7/S10/P8: incremental discovery of headed ``*stream*.csv``
+    files with exactly-once semantics and post-success archival, all
+    engine-managed."""
+    reader = (
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", STREAM_GLOB)
+        .option("header", "true")
+    )
     if archive_dir is not None:
         reader = reader.option("cleanSource", "archive").option(
             "sourceArchiveDir", archive_dir
         )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.format(fmt).load(path)
+    return reader.csv(path)
 
 
 def streaming_daily_kpis(
@@ -213,11 +214,9 @@ def run_incremental_pipeline(
     users: DataFrame,
     output_dir: str,
     checkpoint_dir: str,
-    schema: T.StructType | None = None,
     archive_dir: str | None = None,
     quarantine_dir: str | None = None,
     maintain_kv: bool = False,
-    max_isin_dates: int = 100,
     kv_client_factory=None,
     strict: bool = False,
 ) -> None:
@@ -250,15 +249,8 @@ def run_incremental_pipeline(
     25-per-request DynamoDB batch_writer loop,
     glue_jobs/dynamodb-ingestion.py:133-167).
     """
-    raw_schema = schema or T.StructType(
-        [
-            T.StructField("user_id", T.StringType()),
-            T.StructField("track_id", T.StringType()),
-            T.StructField("listen_time", T.StringType()),
-        ]
-    )
     stream = stream_file_source(
-        spark, input_path, raw_schema, archive_dir=archive_dir
+        spark, input_path, RAW_STREAM_SCHEMA, archive_dir=archive_dir
     )
     validated_dir = os.path.join(output_dir, "validated")
     kpi_dir = os.path.join(output_dir, "genre_kpis")
@@ -306,15 +298,13 @@ def run_incremental_pipeline(
                 raise ValueError(
                     f"strict validation: {n_bad} invalid row(s) in batch {batch_id}"
                 )
-        good = good.withColumn("date", F.to_date("listen_time")).persist()
+        good = good.withColumn("date", F.to_date("listen_time"))
         # accumulate validated rows partitioned by (date, batch): date
         # for the recompute's partition pruning, batch so an
         # at-least-once REPLAY overwrites exactly its own slice instead
         # of appending duplicates that would permanently double-count
         # every later recompute of those dates. The touched-date set
-        # rides the same write via observe() — the old
-        # dates_df.limit().collect() was one more job per batch over
-        # the persisted rows.
+        # rides the same write via observe(), not a job of its own.
         date_obs = Observation()
         good.observe(
             date_obs, F.collect_set("date").alias("dates")
@@ -343,43 +333,20 @@ def run_incremental_pipeline(
 
         # recompute ONLY the dates touched by this batch from the full
         # validated store — the reference's recompute-a-day semantics.
-        # The driver-side date list is count-capped: a normal batch
-        # touches a handful of days, but a pathological backfill
-        # spanning years would turn isin() into a giant OR — past the
-        # cap, switch to a broadcast semi-join on the distinct-dates
-        # frame, which prunes the date-partitioned store at runtime
-        # via dynamic partition pruning instead.
+        # A long date list stays cheap: past 10 literals Spark plans
+        # isin() as InSet, which still prunes the date partitions.
         if not dates:
-            good.unpersist()
             return
+        touched = F.col("date").isin(dates)
 
-        def only_touched(df: DataFrame) -> DataFrame:
-            if len(dates) <= max_isin_dates:
-                return df.filter(F.col("date").isin(dates))
-            return df.join(
-                F.broadcast(good.select("date").distinct()), "date", "semi"
-            )
-
-        full = only_touched(spark.read.parquet(validated_dir))
+        full = spark.read.parquet(validated_dir).filter(touched)
         dim_cols = ["track_id", "track_genre", "duration_ms"] + (
             ["track_name", "artists"] if maintain_kv else []
         )
         enriched = full.join(
             F.broadcast(songs.select(*dim_cols)), "track_id", "inner"
         ).join(F.broadcast(users.select("user_id")), "user_id", "inner")
-        kpis = (
-            enriched.groupBy("track_genre", "date")
-            .agg(
-                F.count("*").alias("listen_count"),
-                F.countDistinct("user_id").alias("unique_listeners"),
-                F.sum("duration_ms").alias("total_listening_time_ms"),
-                F.avg("duration_ms").alias("avg_listening_time_ms"),
-            )
-            .withColumn(
-                "avg_listening_time_per_user",
-                F.col("total_listening_time_ms") / F.col("unique_listeners"),
-            )
-        )
+        kpis = daily_genre_kpis(enriched)
         # audited single-pass write (VERDICT r6 #6): the manifest —
         # rows written, key-column null counts, date bounds — rides the
         # write's own pass via observe(); published per batch commit
@@ -414,30 +381,10 @@ def run_incremental_pipeline(
             _delete_date_partitions(spark, kpi_dir, empty_dates)
 
         if maintain_kv:
-            from ..operators.aggregates import plays_per_item
-            from ..operators.reshape import build_kv_table
-            from ..operators.topk import top_k_per_group
-
-            kpis_back = only_touched(spark.read.parquet(kpi_dir))
-            song_counts = plays_per_item(
-                enriched,
-                ["track_genre", "date", "track_id", "track_name", "artists"],
-            )
-            top_songs = top_k_per_group(
-                song_counts, ["track_genre", "date"], "play_count", 3,
-                tie_break_cols=["track_id"],
-            ).select(
-                "track_genre", "date", "rank", "track_id", "track_name",
-                "artists", "play_count",
-            )
-            top_genres = top_k_per_group(
-                kpis_back.select(
-                    "track_genre", "date",
-                    F.col("listen_count").alias("total_plays"),
-                ),
-                ["date"], "total_plays", 5, tie_break_cols=["track_genre"],
-            ).select("date", "rank", "track_genre", "total_plays")
-            kv = build_kv_table(kpis_back, top_songs, top_genres)
+            # rank off the committed KPI partitions, read back, rather
+            # than re-running the recompute aggregation a second time
+            kpis_back = spark.read.parquet(kpi_dir).filter(touched)
+            _, _, kv = rank_and_project_kv(enriched, kpis_back)
             # sort within files by (pk, sk): parquet min/max stats then
             # skip row groups for the pk-equality + sk-range serving
             # predicates (operators/serving.py)
@@ -470,12 +417,11 @@ def run_incremental_pipeline(
                 # touched pk is deleted-then-rewritten — upserts alone
                 # would leave the demoted ranks' old rows serving
                 write_kv_batched(
-                    only_touched(spark.read.parquet(kv_dir)),
+                    spark.read.parquet(kv_dir).filter(touched),
                     kv_client_factory,
                     replace_pks=True,
                 )
         _write_audit_manifest(spark, output_dir, batch_id, manifests)
-        good.unpersist()
 
     (
         stream.writeStream.foreachBatch(process_batch)

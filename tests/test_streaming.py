@@ -98,33 +98,32 @@ def test_incremental_exactly_once_and_recompute(spark, dims, tmp_path):
     assert spark.read.parquet(str(quar)).count() == 1
 
 
-def test_backfill_many_dates_uses_join_path(spark, dims, tmp_path):
-    """A backfill batch touching more dates than max_isin_dates must
-    recompute through the semi-join path, with identical results."""
+def test_backfill_many_dates(spark, dims, tmp_path):
+    """A backfill batch touching more dates than the 10 literals past
+    which Spark plans isin() as InSet recomputes every one of them."""
     songs, users = dims
     inp = tmp_path / "in"
     out = tmp_path / "out"
     ckpt = tmp_path / "ckpt"
     inp.mkdir()
 
-    # one batch spanning 8 distinct days, cap forced down to 3
+    # one batch spanning 12 distinct days
     rows = [
         f"{u % 3},t{u % 4},2024-06-{10 + d:02d} 1{u}:00:00"
-        for d in range(8)
+        for d in range(12)
         for u in range(2)
     ]
     _write_stream_csv(str(inp / "stream_backfill.csv"), rows)
     run_incremental_pipeline(
         spark, str(inp), songs, users,
         output_dir=str(out), checkpoint_dir=str(ckpt),
-        max_isin_dates=3,
     )
     kpis = spark.read.parquet(str(out / "genre_kpis"))
     dates = {str(r.date) for r in kpis.select("date").distinct().collect()}
-    assert dates == {f"2024-06-{10 + d:02d}" for d in range(8)}
+    assert dates == {f"2024-06-{10 + d:02d}" for d in range(12)}
     # per-day counts correct: 2 plays/day split by genre parity of t
     total = kpis.agg(F.sum("listen_count")).first()[0]
-    assert total == 16
+    assert total == 24
 
 
 def test_streaming_daily_kpis_window(spark, dims, tmp_path):
@@ -732,13 +731,18 @@ def test_incremental_kpis_equal_batch_over_waves(spark, tmp_path):
     the sf0.001 music-shaped stream through the incremental pipeline in
     3 hash waves must leave genre_kpis identical — row for row, value
     for value — to one batch aggregation over the same validated
-    input. Proves the recompute-a-day path converges to batch truth
-    regardless of how arrivals were partitioned."""
+    input, and the committed kv identical to the batch plan's kv over
+    those rows. Proves the recompute-a-day path converges to batch
+    truth regardless of how arrivals were partitioned."""
     import glob
     import shutil
+    from collections import Counter
 
     from music_streaming_data_pipeline_v2_spark.plans.driver_queries import (
         _music_tables,
+    )
+    from music_streaming_data_pipeline_v2_spark.plans.music import (
+        run_music_pipeline,
     )
 
     streams, songs, users = _music_tables(spark, "/root/testdata/sf0.001")
@@ -764,6 +768,7 @@ def test_incremental_kpis_equal_batch_over_waves(spark, tmp_path):
             spark, str(inp), songs, users,
             output_dir=str(tmp_path / "out"),
             checkpoint_dir=str(tmp_path / "ckpt"),
+            maintain_kv=True,
         )
 
     got = {
@@ -797,6 +802,19 @@ def test_incremental_kpis_equal_batch_over_waves(spark, tmp_path):
         for r in expected_df.collect()
     }
     assert got == expected
+
+    validated = spark.read.parquet(str(tmp_path / "out" / "validated"))
+    batch_kv = run_music_pipeline(
+        validated.select("user_id", "track_id", "listen_time"), songs, users
+    ).kv
+
+    def kv_rows(df):
+        df = df.withColumn("date", F.col("date").cast("string"))
+        return Counter(tuple(r) for r in df.select(*sorted(df.columns)).collect())
+
+    streamed_kv = spark.read.parquet(str(tmp_path / "out" / "kv"))
+    assert sorted(streamed_kv.columns) == sorted(batch_kv.columns)
+    assert kv_rows(streamed_kv) == kv_rows(batch_kv)
 
 
 def test_incremental_dedup_rejects_incompatible_state(spark, tmp_path):
@@ -935,6 +953,47 @@ def test_kv_push_replaces_stale_rank_rows(spark, tmp_path):
     assert song_rows[0].startswith("SONG#1#t2")
     stored = spark.read.parquet(str(tmp_path / "out" / "kv"))
     assert set(state2) == {(r.pk, r.sk) for r in stored.collect()}
+
+
+def test_failed_sink_leaves_no_cached_batch(spark, tmp_path):
+    """A drain whose KV client raises must not leave the batch cached:
+    every retried drain would otherwise pin one more copy in executor
+    memory for the rest of the session."""
+    songs = spark.createDataFrame(
+        [
+            Row(track_id=f"t{i}", track_name=f"name{i}", artists=f"a{i}",
+                track_genre="rock", duration_ms=100000)
+            for i in range(2)
+        ]
+    )
+    users = spark.createDataFrame([Row(user_id=str(u)) for u in range(2)])
+    inp = tmp_path / "in"
+    inp.mkdir()
+    _write_stream_csv(
+        str(inp / "stream1.csv"),
+        ["0,t0,2024-06-25 10:00:00", "1,t1,2024-06-25 11:00:00"],
+    )
+
+    class FailingClient:
+        def delete_pk(self, pk):
+            pass
+
+        def put_batch(self, items):
+            raise RuntimeError("kv store unavailable")
+
+    def persistent_rdds():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = persistent_rdds()
+    with pytest.raises(Exception, match="kv store unavailable"):
+        run_incremental_pipeline(
+            spark, str(inp), songs, users,
+            output_dir=str(tmp_path / "out"),
+            checkpoint_dir=str(tmp_path / "ckpt"),
+            maintain_kv=True,
+            kv_client_factory=FailingClient,
+        )
+    assert persistent_rdds() == before
 
 
 def test_recompute_to_zero_rows_deletes_stale_partitions(spark, tmp_path):
