@@ -160,9 +160,10 @@ class JsonDirKvClient:
     def materialize(self) -> dict[tuple, dict]:
         """Fold the append-only log into final store state: last write
         wins per (pk, sk); a delete_pk tombstone clears the pk's items
-        written before it. Batch files sort by name (pid-uuid), which
-        is stable enough for the single-writer-per-pk tests that use
-        this (replace_pks routes each pk through one task)."""
+        written before it. Batch files sort by name, which starts with
+        the ``time_ns`` write time, so the fold follows write order
+        (replace_pks routes each pk through one task, so a pk's delete
+        and rewrite come from one writer)."""
         state: dict[tuple, dict] = {}
         for item in self.read_all():
             if item.get("_op") == "delete_pk":

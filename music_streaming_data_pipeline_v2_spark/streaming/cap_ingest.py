@@ -33,55 +33,32 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-DOC_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("source", T.StringType()),
-    ]
-)
+from .state import drain, json_stream, read_state_or_empty, write_batch
 
 _STATE_SCHEMA = "g string, doc_id long, _h string"
 
 _SALT = "c|"
 
 
-def _hash_col(id_col: str):
-    return F.md5(F.concat(F.lit(_SALT), F.col(id_col).cast("string")))
-
-
 def run_incremental_cap(
-    spark: SparkSession,
-    input_path: str,
-    work_dir: str,
-    cap: int,
-    schema: T.StructType | None = None,
-    group_col: str = "source",
-    id_col: str = "doc_id",
+    spark: SparkSession, input_path: str, work_dir: str, cap: int
 ) -> None:
-    """Drain ``input_path`` (JSON-lines doc files) into the candidate
-    state under ``work_dir`` (cells/, ckpt/). Each batch contributes
-    at most ``cap`` rows per group it touches."""
-    cells_dir = os.path.join(work_dir, "cells")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
-
-    stream = (
-        spark.readStream.schema(schema or DOC_SCHEMA)
-        .format("json")
-        .load(input_path)
-    )
+    """Drain ``input_path`` (JSON-lines doc files: doc_id, text,
+    source) into the per-source candidate state under ``work_dir``
+    (cells/, ckpt/). Each batch contributes at most ``cap`` rows per
+    source it touches."""
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        w = Window.partitionBy(group_col).orderBy("_h", id_col)
         cand = (
             batch_df.select(
-                F.col(group_col).alias("g"),
-                F.col(id_col).alias("doc_id"),
-                _hash_col(id_col).alias("_h"),
+                F.col("source").alias("g"),
+                "doc_id",
+                F.md5(
+                    F.concat(F.lit(_SALT), F.col("doc_id").cast("string"))
+                ).alias("_h"),
             )
             # dedup BEFORE the rank: a document delivered twice inside
             # one batch would otherwise occupy two of the group's cap
@@ -97,18 +74,12 @@ def run_incremental_cap(
             .filter(F.col("_rn") <= int(cap))
             .drop("_rn")
         )
-        # batch_id-partitioned overwrite: replays rewrite their own
-        # partition byte-identically (idempotent commit discipline)
-        cand.write.mode("overwrite").parquet(
-            os.path.join(cells_dir, f"batch_id={batch_id}")
-        )
+        write_batch(cand, os.path.join(work_dir, "cells"), batch_id)
 
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain(
+        json_stream(spark, input_path),
+        os.path.join(work_dir, "ckpt"),
+        process_batch,
     )
 
 
@@ -123,8 +94,6 @@ def query_capped(
     Plan: the window runs over the state (≤ batches × groups × cap
     rows after the (g, doc_id) dedup), never over documents; nothing
     re-reads raw text."""
-    from .state import read_state_or_empty
-
     state = read_state_or_empty(
         spark, os.path.join(work_dir, "cells"), _STATE_SCHEMA
     )

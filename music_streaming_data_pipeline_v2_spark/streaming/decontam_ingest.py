@@ -40,14 +40,15 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-DOC_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("source", T.StringType()),
-    ]
+from .state import (
+    drain,
+    exists,
+    json_stream,
+    read_json,
+    read_state_or_empty,
+    write_batch,
+    write_json,
 )
 
 
@@ -56,15 +57,14 @@ def init_decontam_state(
     work_dir: str,
     test_docs: DataFrame,
     n: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     margin: int = 0,
     min_segment_tokens: int = 1,
 ) -> None:
-    """Materialize the eval set's distinct (test_id, gram) postings —
-    run once per firewall state. Refuses to overwrite an existing
-    state (a silently swapped gram set would invalidate every batch
-    already screened; build a fresh work_dir instead).
+    """Materialize the eval set's (``test_docs``: doc_id, text)
+    distinct (test_id, gram) postings — run once per firewall state.
+    Refuses to overwrite an existing state (a silently swapped gram
+    set would invalidate every batch already screened; build a fresh
+    work_dir instead).
 
     ``margin`` / ``min_segment_tokens`` are the span-EXCISION policy
     the cleaned-corpus mode applies (see ``run_incremental_decontam``
@@ -74,37 +74,31 @@ def init_decontam_state(
     from ..operators.text import word_ngram_postings
 
     tg_dir = os.path.join(work_dir, "testgrams")
-    if os.path.isdir(tg_dir):
+    if exists(spark, tg_dir):
         raise ValueError(
             f"decontam state at {work_dir} already initialized; screened "
             "batches are only comparable against ONE pinned eval gram set "
             "— use a fresh work_dir for a new eval set"
         )
-    import json
-
-    os.makedirs(work_dir, exist_ok=True)
-    with open(os.path.join(work_dir, "state_meta.json"), "w") as fh:
-        json.dump(
-            {
-                "format": 2,
-                "n": int(n),
-                "margin": int(margin),
-                "min_segment_tokens": int(min_segment_tokens),
-            },
-            fh,
-        )
-    word_ngram_postings(
-        test_docs, n, text_col=text_col, id_col=id_col, out_id="test_id"
-    ).write.mode("error").parquet(tg_dir)
+    write_json(
+        spark,
+        os.path.join(work_dir, "state_meta.json"),
+        {
+            "format": 2,
+            "n": int(n),
+            "margin": int(margin),
+            "min_segment_tokens": int(min_segment_tokens),
+        },
+    )
+    word_ngram_postings(test_docs, n, out_id="test_id").write.mode(
+        "error"
+    ).parquet(tg_dir)
 
 
 def run_incremental_decontam(
     spark: SparkSession,
     input_path: str,
     work_dir: str,
-    schema: T.StructType | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     emit_cleaned: bool = False,
 ) -> None:
     """Drain ``input_path`` (JSON-lines doc files) through the
@@ -122,28 +116,15 @@ def run_incremental_decontam(
     additivity argument as the hit rows), so the drained cleaned
     corpus is EXACTLY the batch operator over the concatenation of
     all drained waves (pinned by tests/test_decontam_ingest.py)."""
-    import json
-
-    meta_path = os.path.join(work_dir, "state_meta.json")
-    if not os.path.exists(meta_path):
+    meta = read_json(spark, os.path.join(work_dir, "state_meta.json"))
+    if meta is None:
         raise ValueError(
             f"no decontam state at {work_dir}: run init_decontam_state first"
         )
-    with open(meta_path) as fh:
-        meta = json.load(fh)
     n = int(meta["n"])
     margin = int(meta.get("margin", 0))
     floor = int(meta.get("min_segment_tokens", 1))
     tg_dir = os.path.join(work_dir, "testgrams")
-    hits_dir = os.path.join(work_dir, "hits")
-    cleaned_dir = os.path.join(work_dir, "cleaned")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
-
-    stream = (
-        spark.readStream.schema(schema or DOC_SCHEMA)
-        .format("json")
-        .load(input_path)
-    )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         from ..operators.text import word_ngram_postings
@@ -160,17 +141,13 @@ def run_incremental_decontam(
             # excision's two consumers read it back.
             from ..operators.text import grams_from_positions, positioned_tokens
 
-            pos = positioned_tokens(
-                batch_df, text_col=text_col, id_col=id_col
-            ).localCheckpoint(eager=False)
+            pos = positioned_tokens(batch_df).localCheckpoint(eager=False)
             grams = grams_from_positions(pos, n).select(
                 F.col("_id").alias("doc_id"), "gram"
             ).distinct()
         else:
             pos = None
-            grams = word_ngram_postings(
-                batch_df, n, text_col=text_col, id_col=id_col, out_id="doc_id"
-            )
+            grams = word_ngram_postings(batch_df, n)
         testgrams = spark.read.schema("test_id long, gram string").parquet(
             tg_dir
         )
@@ -182,9 +159,7 @@ def run_incremental_decontam(
                 F.countDistinct("test_id").alias("n_test_docs_hit"),
             )
         )
-        hits.write.mode("overwrite").parquet(
-            os.path.join(hits_dir, f"batch_id={batch_id}")
-        )
+        write_batch(hits, os.path.join(work_dir, "hits"), batch_id)
         if emit_cleaned:
             from ..operators.text import remove_contaminated_spans
 
@@ -194,21 +169,15 @@ def run_incremental_decontam(
                 n=n,
                 margin=margin,
                 min_segment_tokens=floor,
-                text_col=text_col,
-                id_col=id_col,
                 eval_grams=testgrams,
                 positions=pos,
             )
-            cleaned.write.mode("overwrite").parquet(
-                os.path.join(cleaned_dir, f"batch_id={batch_id}")
-            )
+            write_batch(cleaned, os.path.join(work_dir, "cleaned"), batch_id)
 
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain(
+        json_stream(spark, input_path),
+        os.path.join(work_dir, "ckpt"),
+        process_batch,
     )
 
 
@@ -219,8 +188,6 @@ def query_cleaned_corpus(spark: SparkSession, work_dir: str) -> DataFrame:
     recomputation: excision is batch-local against the pinned gram
     postings, so the union over waves ≡ the batch operator over the
     concatenated corpus."""
-    from .state import read_state_or_empty
-
     return read_state_or_empty(
         spark,
         os.path.join(work_dir, "cleaned"),
@@ -233,8 +200,6 @@ def query_contamination(spark: SparkSession, work_dir: str) -> DataFrame:
     """All flagged arrivals so far: ``(doc_id, n_shared_grams,
     n_test_docs_hit)`` — the union of per-batch screening rows, exact
     with zero recomputation (no cross-batch interaction exists)."""
-    from .state import read_state_or_empty
-
     return read_state_or_empty(
         spark,
         os.path.join(work_dir, "hits"),

@@ -47,7 +47,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-DOC_SCHEMA = T.StructType(
+from .state import (
+    compact_label_deltas,
+    drain,
+    exists,
+    latest_batch_id,
+    read_json,
+    read_resolved_labels,
+    read_state_or_empty,
+    write_batch,
+    write_json,
+)
+
+#: the headed CSV layout the dedup index drains
+CSV_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
         T.StructField("lang", T.StringType()),
@@ -65,7 +78,6 @@ def run_incremental_dedup(
     bands: int = 8,
     shingle_k: int = 3,
     max_bucket: int = 1000,
-    schema: T.StructType | None = None,
     maintain_components: bool = True,
     prune_after_drain: bool = False,
 ) -> None:
@@ -114,13 +126,12 @@ def run_incremental_dedup(
         "bands": bands,
         "shingle_k": shingle_k,
     }
+    # meta IO and the state probe go through the Hadoop FileSystem
+    # API: a driver-local path check would miss state on any other
+    # scheme (or under a file:// URI) and silently re-pin parameters
     meta_path = os.path.join(work_dir, "state_meta.json")
-    has_state = os.path.isdir(docs_dir) or os.path.isdir(index_dir)
-    if os.path.exists(meta_path):
-        import json
-
-        with open(meta_path) as fh:
-            found = json.load(fh)
+    found = read_json(spark, meta_path)
+    if found is not None:
         if found != _meta:
             raise ValueError(
                 f"incompatible dedup-index state at {work_dir}: state was "
@@ -128,34 +139,20 @@ def run_incremental_dedup(
                 "work_dir (or rebuild) — mixed-parameter postings would "
                 "silently miss duplicates"
             )
-    elif has_state:
+    elif exists(spark, docs_dir) or exists(spark, index_dir):
         raise ValueError(
             f"dedup-index state at {work_dir} predates the sketch-bearing "
             "format and cannot be resumed; rebuild into a fresh work_dir"
         )
     else:
-        import json
-
-        os.makedirs(work_dir, exist_ok=True)
-        with open(meta_path, "w") as fh:
-            json.dump(_meta, fh)
+        write_json(spark, meta_path, _meta)
 
     stream = (
-        spark.readStream.schema(schema or DOC_SCHEMA)
+        spark.readStream.schema(CSV_SCHEMA)
         .option("header", "true")
         .format("csv")
         .load(input_path)
     )
-
-    def read_state(state_dir: str, schema, before_batch: int) -> DataFrame:
-        """Prior-batch state only: partition-pruned ``batch_id <`` read
-        that also excludes any partial partition a crashed attempt at
-        the CURRENT batch may have left behind. Schema is declared
-        explicitly and an absent path is the empty relation — the
-        shared state-reader contract."""
-        from .state import read_state_or_empty
-
-        return read_state_or_empty(spark, state_dir, schema, before_batch)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         # emptiness probed on the RAW batch (one row of one file) —
@@ -186,8 +183,13 @@ def run_incremental_dedup(
             shingles_col="shingles",
         ).persist()
 
-        old_post = read_state(
-            index_dir, "doc_id long, band_id int, band_hash long", batch_id
+        # prior batches only (``batch_id <`` current): a crashed
+        # attempt's partial partition never feeds its own retry
+        old_post = read_state_or_empty(
+            spark,
+            index_dir,
+            "doc_id long, band_id int, band_hash long",
+            batch_id,
         )
         all_post = old_post.unionByName(new_post)
         # cap pathological buckets by CURRENT total bucket width
@@ -214,7 +216,7 @@ def run_incremental_dedup(
             .distinct()
         )
 
-        old_docs = read_state(docs_dir, batch.schema, batch_id)
+        old_docs = read_state_or_empty(spark, docs_dir, batch.schema, batch_id)
         texts = old_docs.unionByName(batch).select(
             F.col("doc_id").alias("_id"), F.col("shingles").alias("_sh")
         )
@@ -238,10 +240,9 @@ def run_incremental_dedup(
         # of every state relation and overwrites it wholesale, so an
         # at-least-once replay rewrites the same content (batch_id is
         # carried by the partition directory, not a data column)
-        part = f"batch_id={batch_id}"
-        verified.write.mode("overwrite").parquet(os.path.join(pairs_dir, part))
-        new_post.write.mode("overwrite").parquet(os.path.join(index_dir, part))
-        batch.write.mode("overwrite").parquet(os.path.join(docs_dir, part))
+        write_batch(verified, pairs_dir, batch_id)
+        write_batch(new_post, index_dir, batch_id)
+        write_batch(batch, docs_dir, batch_id)
         new_post.unpersist()
         batch.unpersist()
 
@@ -271,11 +272,10 @@ def run_incremental_dedup(
         # replay-deterministic, so the overwrite commits identical
         # content.
         from ..operators.clustering import connected_components
-        from .state import latest_batch_id, read_resolved_labels
 
         delta = (
             spark.read.schema("id_a long, id_b long, jaccard double")
-            .parquet(os.path.join(pairs_dir, part))
+            .parquet(os.path.join(pairs_dir, f"batch_id={batch_id}"))
             .select("id_a", "id_b")
         )
         prev = read_resolved_labels(
@@ -305,7 +305,8 @@ def run_incremental_dedup(
             # so far (prior partitions + this batch); written as a
             # FULL labeling, so resolution never reaches past it
             all_pairs = (
-                read_state(
+                read_state_or_empty(
+                    spark,
                     pairs_dir,
                     "id_a long, id_b long, jaccard double",
                     batch_id,
@@ -316,9 +317,7 @@ def run_incremental_dedup(
             snapshot = connected_components(
                 all_pairs, src="id_a", dst="id_b"
             ).select("id", "component")
-            snapshot.write.mode("overwrite").parquet(
-                os.path.join(comps_dir, part)
-            )
+            write_batch(snapshot, comps_dir, batch_id)
         elif not delta.isEmpty():
             # The resolved labeling (a max_by aggregate over the whole
             # comps chain) feeds FOUR subtrees below — the two
@@ -368,9 +367,7 @@ def run_incremental_dedup(
                 .join(cc, "id")
                 .select("id", "component")
             )
-            changed.unionByName(new_rows).write.mode("overwrite").parquet(
-                os.path.join(comps_dir, part)
-            )
+            write_batch(changed.unionByName(new_rows), comps_dir, batch_id)
         else:
             # no new pairs: labels unchanged; commit an EMPTY delta
             # partition so `comps latest batch == pairs latest batch`
@@ -378,21 +375,15 @@ def run_incremental_dedup(
             # the serving freshness probe and the lag probe above both
             # rely on. Cost: one metadata-only write, NOT a labeling
             # copy (the old copy-forward was ∝ labeling size).
-            spark.createDataFrame(
-                [], "id long, component long"
-            ).write.mode("overwrite").parquet(os.path.join(comps_dir, part))
+            write_batch(
+                spark.createDataFrame([], "id long, component long"),
+                comps_dir,
+                batch_id,
+            )
 
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(stream, ckpt_dir, process_batch)
 
     if prune_after_drain and maintain_components:
-        from .state import compact_label_deltas
-
         compact_label_deltas(
             spark,
             comps_dir,

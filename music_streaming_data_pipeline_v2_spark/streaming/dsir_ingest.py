@@ -36,93 +36,51 @@ thereby inherits dsir_importance's DuckDB oracle.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-DOC_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-    ]
-)
+from .state import CellSpec, drain_cells, json_stream
 
 _NUM_BUCKETS = 256
 
+#: docs arrive once (the family's disjoint-arrival contract, which the
+#: readout's plain union relies on), so (doc, bucket) cells never
+#: repeat across batches and the sum fold only collapses the chain
+DOCBUCKETS = CellSpec(
+    "docbuckets", "doc_id long, bkt int, cnt long", ("doc_id", "bkt"), "sum"
+)
+
+
+def _doc_buckets(batch_df: DataFrame) -> DataFrame:
+    from ..operators.sampling import _dsir_feature_buckets
+
+    return (
+        _dsir_feature_buckets(batch_df, "text", "doc_id", _NUM_BUCKETS)
+        .groupBy("_doc", "bkt")
+        .agg(F.count("*").alias("cnt"))
+        .select(F.col("_doc").alias("doc_id"), "bkt", "cnt")
+    )
+
 
 def run_incremental_dsir(
-    spark: SparkSession,
-    input_path: str,
-    work_dir: str,
-    schema: T.StructType | None = None,
-    compact_after_drain: bool = False,
+    spark: SparkSession, input_path: str, work_dir: str
 ) -> None:
     """Drain ``input_path`` (JSON-lines doc files: doc_id, text) into
     the DSIR state under ``work_dir`` (docbuckets/, ckpt/)."""
-    from ..operators.sampling import _dsir_feature_buckets
-
-    docbuckets_dir = os.path.join(work_dir, "docbuckets")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
-
-    stream = (
-        spark.readStream.schema(schema or DOC_SCHEMA)
-        .format("json")
-        .load(input_path)
+    drain_cells(
+        json_stream(spark, input_path), work_dir, _doc_buckets, DOCBUCKETS
     )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        counts = (
-            _dsir_feature_buckets(batch_df, "text", "doc_id", _NUM_BUCKETS)
-            .groupBy("_doc", "bkt")
-            .agg(F.count("*").alias("cnt"))
-            .select(F.col("_doc").alias("doc_id"), "bkt", "cnt")
-        )
-        counts.write.mode("overwrite").parquet(
-            os.path.join(docbuckets_dir, f"batch_id={batch_id}")
-        )
-
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-    if compact_after_drain:
-        from .state import compact_additive_cells
-
-        # docs arrive once (the family's disjoint-arrival contract, the
-        # same one the readout's plain union already relies on), so the
-        # (doc, bucket) cells across batches are disjoint and the sum
-        # fold is the identity on content — it only collapses the
-        # partition chain
-        compact_additive_cells(
-            spark,
-            docbuckets_dir,
-            "doc_id long, bkt int, cnt long",
-            key_cols=["doc_id", "bkt"],
-            sum_cols=["cnt"],
-            ckpt_dir=ckpt_dir,
-        )
 
 
 def query_dsir_scores(
-    spark: SparkSession,
-    work_dir: str,
-    target: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
+    spark: SparkSession, work_dir: str, target: DataFrame
 ) -> DataFrame:
     """Importance weights over every document drained so far —
     identical arithmetic (and the same scaled-BIGINT log-ratio table,
     via the shared ``dsir_log_ratio``) as ``dsir_importance``, but
     reading the stored bucket vectors instead of re-featurizing the
-    corpus. Returns ``(id, n_feats, log_weight)``.
+    corpus. ``target`` has ``(doc_id, text)`` columns. Returns
+    ``(doc_id, n_feats, log_weight)``.
 
     Plan: the raw distribution is one 256-group aggregate over the
     state; the target distribution is featurized from the (small)
@@ -132,20 +90,12 @@ def query_dsir_scores(
     and a fraction of the corpus it summarizes."""
     from ..operators.sampling import _dsir_feature_buckets, dsir_log_ratio
 
-    from .state import read_state_or_empty
-
-    # explicit schema + FS-agnostic absent-path handling via the
-    # shared state reader: an undrained (or all-empty-batches) state
-    # is a legitimate "nothing scored yet" relation, not a crash
-    # (ADVICE r4 / the semantic_ingest lesson)
-    db = read_state_or_empty(
-        spark,
-        os.path.join(work_dir, "docbuckets"),
-        "doc_id long, bkt int, cnt long",
-    )
+    # an undrained (or all-empty-batches) state is a legitimate
+    # "nothing scored yet" relation, not a crash
+    db = DOCBUCKETS.read(spark, work_dir)
     r_cnt = db.groupBy("bkt").agg(F.sum("cnt").alias("rc"))
     t_cnt = (
-        _dsir_feature_buckets(target, text_col, id_col, _NUM_BUCKETS)
+        _dsir_feature_buckets(target, "text", "doc_id", _NUM_BUCKETS)
         .groupBy("bkt")
         .agg(F.count("*").alias("tc"))
     )
@@ -158,7 +108,7 @@ def query_dsir_scores(
             F.sum(F.col("cnt") * F.col("_lr_i")).alias("_sum"),
         )
         .select(
-            F.col("doc_id").alias(id_col),
+            "doc_id",
             "n_feats",
             (F.col("_sum").cast("double") / F.lit(1e9)).alias("log_weight"),
         )

@@ -38,14 +38,22 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .state import CellSpec, drain_cells, json_stream, pin_params
 
 KEY_SCHEMA = T.StructType(
     [
         T.StructField("group", T.StringType()),
         T.StructField("key", T.StringType()),
     ]
+)
+
+REGISTERS = CellSpec(
+    "registers",
+    "group string, bucket int, rho_max int",
+    ("group", "bucket"),
+    "max",
 )
 
 #: Register-addressing version: registers built under a different
@@ -56,93 +64,45 @@ KEY_SCHEMA = T.StructType(
 HLL_ADDR_VERSION = 1
 
 
-def _check_scheme(spark: SparkSession, work_dir: str, write: bool) -> None:
+def _pin_scheme(spark: SparkSession, work_dir: str, write: bool) -> None:
     from ..operators.frequency import HLL_P
-    from .state import read_state_or_empty
 
-    geo_dir = os.path.join(work_dir, "scheme")
-    rows = read_state_or_empty(
-        spark, geo_dir, "hll_p int, addr_version int"
-    ).collect()
-    if rows:
-        got = (rows[0]["hll_p"], rows[0]["addr_version"])
-        if got != (HLL_P, HLL_ADDR_VERSION):
-            raise ValueError(
-                f"hll state at {work_dir!r} was built with p={got[0]} "
-                f"addressing v{got[1]}; this build uses p={HLL_P} "
-                f"v{HLL_ADDR_VERSION} — registers are not mergeable "
-                "across schemes, rebuild the state directory"
-            )
-        return
-    if write:
-        spark.createDataFrame(
-            [(int(HLL_P), int(HLL_ADDR_VERSION))],
-            "hll_p int, addr_version int",
-        ).write.mode("overwrite").parquet(geo_dir)
+    pin_params(
+        spark,
+        os.path.join(work_dir, "scheme"),
+        "hll_p int, addr_version int",
+        (int(HLL_P), int(HLL_ADDR_VERSION)),
+        write,
+    )
+
+
+def _registers(batch_df: DataFrame) -> DataFrame:
+    from ..operators.frequency import hll_registers
+
+    # the SAME register builder as the batch sketch (incremental ≡
+    # batch by construction: md5 registers are content-addressed and
+    # max-mergeable)
+    return hll_registers(batch_df, "key", ["group"])
 
 
 def run_incremental_hll(
-    spark: SparkSession,
-    input_path: str,
-    work_dir: str,
-    schema: T.StructType | None = None,
-    group_col: str = "group",
-    key_col: str = "key",
-    compact_after_drain: bool = False,
+    spark: SparkSession, input_path: str, work_dir: str
 ) -> None:
     """Drain ``input_path`` (JSON-lines files: group, key) into the
     HLL register state under ``work_dir`` (registers/, ckpt/).
-    ``compact_after_drain=True`` folds the register chain into the
-    newest partition (bucket-wise MAX — exactly the readout's merge,
-    so estimates are bit-identical while readout cost stops tracking
-    drain count)."""
-    reg_dir = os.path.join(work_dir, "registers")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
-    _check_scheme(spark, work_dir, write=True)
-
-    stream = (
-        spark.readStream.schema(schema or KEY_SCHEMA)
-        .format("json")
-        .load(input_path)
+    ``REGISTERS.compact`` folds the register chain between drains
+    (bucket-wise MAX — exactly the readout's merge, so estimates are
+    bit-identical while readout cost stops tracking drain count)."""
+    _pin_scheme(spark, work_dir, write=True)
+    drain_cells(
+        json_stream(spark, input_path, KEY_SCHEMA),
+        work_dir,
+        _registers,
+        REGISTERS,
     )
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from ..operators.frequency import hll_registers
 
-        if batch_df.isEmpty():
-            return
-        # the SAME register builder as the batch sketch (incremental ≡
-        # batch by construction: md5 registers are content-addressed
-        # and max-mergeable)
-        regs = hll_registers(batch_df, key_col, [group_col])
-        regs.write.mode("overwrite").parquet(
-            os.path.join(reg_dir, f"batch_id={batch_id}")
-        )
-
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-    if compact_after_drain:
-        from .state import compact_additive_cells
-
-        compact_additive_cells(
-            spark,
-            reg_dir,
-            f"{group_col} string, bucket int, rho_max int",
-            key_cols=[group_col, "bucket"],
-            sum_cols={"rho_max": "max"},
-            ckpt_dir=ckpt_dir,
-        )
-
-
-def query_cardinality(
-    spark: SparkSession, work_dir: str, group_col: str = "group"
-) -> DataFrame:
+def query_cardinality(spark: SparkSession, work_dir: str) -> DataFrame:
     """Per-group cardinality estimates over everything drained so far —
     identical readout to the batch path (``hll_estimate``) over the
     max-merge of the stored per-batch registers instead of a fresh
@@ -152,15 +112,6 @@ def query_cardinality(
     m rows) and a broadcast join of the ≤ m-row linear-counting table
     — nothing re-reads raw keys."""
     from ..operators.frequency import hll_estimate
-    from .state import read_state_or_empty
 
-    _check_scheme(spark, work_dir, write=False)
-    state = read_state_or_empty(
-        spark,
-        os.path.join(work_dir, "registers"),
-        f"{group_col} string, bucket int, rho_max int",
-    )
-    merged = state.groupBy(group_col, "bucket").agg(
-        F.max("rho_max").alias("rho_max")
-    )
-    return hll_estimate(merged, [group_col])
+    _pin_scheme(spark, work_dir, write=False)
+    return hll_estimate(REGISTERS.merged(spark, work_dir), ["group"])

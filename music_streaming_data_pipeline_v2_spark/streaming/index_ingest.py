@@ -35,88 +35,53 @@ streaming layer's correctness inherit bm25_topk's DuckDB oracle.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-DOC_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-    ]
+from .state import CellSpec, drain_cells, json_stream
+
+# disjoint-arrival contract (as the readout's union assumes): no
+# (doc, token) key repeats across batches, so the sum fold is
+# content-identity and only collapses the partition chain
+POSTINGS = CellSpec(
+    "postings",
+    "doc_id long, token string, tf long",
+    ("doc_id", "token"),
+    "sum",
 )
+DOCLENS = CellSpec("doclens", "doc_id long, dl long", ("doc_id",), "sum")
+
+
+def _postings_and_lengths(
+    batch_df: DataFrame,
+) -> tuple[DataFrame, DataFrame]:
+    from ..operators.text import tokens
+
+    # tokenize the batch ONCE; both state relations derive from tf
+    tok = batch_df.select(
+        "doc_id",
+        F.explode(F.transform(tokens("text"), F.lower)).alias("token"),
+    )
+    tf = tok.groupBy("doc_id", "token").agg(
+        F.count("*").alias("tf")
+    ).localCheckpoint()  # one evaluation feeds both writes
+    dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
+    return tf, dl
 
 
 def run_incremental_index(
-    spark: SparkSession,
-    input_path: str,
-    work_dir: str,
-    schema: T.StructType | None = None,
-    compact_after_drain: bool = False,
+    spark: SparkSession, input_path: str, work_dir: str
 ) -> None:
     """Drain ``input_path`` (JSON-lines doc files: doc_id, text) into
     the BM25 index state under ``work_dir`` (postings/, doclens/,
     ckpt/)."""
-    from ..operators.text import tokens
-
-    postings_dir = os.path.join(work_dir, "postings")
-    doclens_dir = os.path.join(work_dir, "doclens")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
-
-    stream = (
-        spark.readStream.schema(schema or DOC_SCHEMA)
-        .format("json")
-        .load(input_path)
+    drain_cells(
+        json_stream(spark, input_path),
+        work_dir,
+        _postings_and_lengths,
+        POSTINGS,
+        DOCLENS,
     )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # tokenize the batch ONCE; both state relations derive from tf
-        tok = batch_df.select(
-            "doc_id",
-            F.explode(F.transform(tokens("text"), F.lower)).alias("token"),
-        )
-        tf = tok.groupBy("doc_id", "token").agg(
-            F.count("*").alias("tf")
-        ).localCheckpoint()  # one evaluation feeds both writes
-        dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-        part = f"batch_id={batch_id}"
-        tf.write.mode("overwrite").parquet(os.path.join(postings_dir, part))
-        dl.write.mode("overwrite").parquet(os.path.join(doclens_dir, part))
-
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-    if compact_after_drain:
-        from .state import compact_additive_cells
-
-        # disjoint-arrival contract (as the readout's union assumes):
-        # no (doc, token) key repeats across batches, so the sum fold
-        # is content-identity and only collapses the partition chain
-        compact_additive_cells(
-            spark,
-            postings_dir,
-            "doc_id long, token string, tf long",
-            key_cols=["doc_id", "token"],
-            sum_cols=["tf"],
-            ckpt_dir=ckpt_dir,
-        )
-        compact_additive_cells(
-            spark,
-            doclens_dir,
-            "doc_id long, dl long",
-            key_cols=["doc_id"],
-            sum_cols=["dl"],
-            ckpt_dir=ckpt_dir,
-        )
 
 
 def query_index(
@@ -126,13 +91,12 @@ def query_index(
     k: int = 10,
     k1: float = 1.2,
     b: float = 0.75,
-    query_id_col: str = "query_id",
-    query_text_col: str = "text",
 ) -> DataFrame:
-    """BM25 top-``k`` per query over the accumulated index state —
-    identical scoring (and the same scaled-BIGINT summation) as
-    ``bm25_topk``, but reading the stored postings instead of
-    re-tokenizing the corpus. Returns (query_id, rank, doc_id, score).
+    """BM25 top-``k`` per query (``queries``: query_id, text) over the
+    accumulated index state — identical scoring (and the same
+    scaled-BIGINT summation) as ``bm25_topk``, but reading the stored
+    postings instead of re-tokenizing the corpus. Returns (query_id,
+    rank, doc_id, score).
 
     Plan: the broadcast query-token join prunes the postings scan to
     matching tokens; df comes from ONE aggregate over the pruned-side
@@ -142,28 +106,16 @@ def query_index(
 
     from ..operators.text import tokens as _tokens
 
-    from .state import read_state_or_empty
-
-    # explicit schemas + FS-agnostic absent-path handling via the
-    # shared state reader: an undrained state is a legitimate "no
-    # results" relation, not a crash (ADVICE r4 / the semantic_ingest
-    # lesson)
-    tf = read_state_or_empty(
-        spark,
-        os.path.join(work_dir, "postings"),
-        "doc_id long, token string, tf long",
-    )
-    dl_rel = read_state_or_empty(
-        spark,
-        os.path.join(work_dir, "doclens"),
-        "doc_id long, dl long",
-    )
+    # an undrained state is a legitimate "no results" relation, not a
+    # crash (ADVICE r4 / the semantic_ingest lesson)
+    tf = POSTINGS.read(spark, work_dir)
+    dl_rel = DOCLENS.read(spark, work_dir)
     stats = dl_rel.groupBy().agg(
         F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl")
     )
     qt = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.explode(F.transform(_tokens(query_text_col), F.lower)).alias("token"),
+        "query_id",
+        F.explode(F.transform(_tokens("text"), F.lower)).alias("token"),
     ).distinct()
     # df only for tokens the queries actually probe (the docstring's
     # "pruned-side complement" — the previous full-vocabulary groupBy

@@ -52,48 +52,21 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-DOC_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-    ]
-)
+from .state import drain, json_stream, read_state_or_empty, write_batch
 
 _LINES_SCHEMA = "line string, keep_doc_id long, keep_pos int"
 _DOCS_SCHEMA = "doc_id long, text string, n_lines long, n_dropped long"
 
 
-def _read_state(
-    spark: SparkSession, state_dir: str, schema: str, before_batch: int | None
-) -> DataFrame:
-    """Partition-pruned read of prior-batch state; empty typed relation
-    when the state doesn't exist yet. ``before_batch=None`` reads all
-    committed partitions (query-time)."""
-    from .state import read_state_or_empty
-
-    return read_state_or_empty(spark, state_dir, schema, before_batch)
-
-
 def run_incremental_line_dedup(
-    spark: SparkSession,
-    input_path: str,
-    work_dir: str,
-    schema: T.StructType | None = None,
+    spark: SparkSession, input_path: str, work_dir: str
 ) -> None:
     """Drain ``input_path`` (JSON-lines doc files: doc_id, text) through
     the incremental line dedup under ``work_dir`` (lines/, docs/,
     ckpt/)."""
     lines_dir = os.path.join(work_dir, "lines")
     docs_dir = os.path.join(work_dir, "docs")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
-
-    stream = (
-        spark.readStream.schema(schema or DOC_SCHEMA)
-        .format("json")
-        .load(input_path)
-    )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -110,9 +83,9 @@ def run_incremental_line_dedup(
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        seen = _read_state(spark, lines_dir, _LINES_SCHEMA, batch_id).select(
-            F.col("line").alias("_line")
-        )
+        seen = read_state_or_empty(
+            spark, lines_dir, _LINES_SCHEMA, batch_id
+        ).select(F.col("line").alias("_line"))
         # lines whose first global occurrence is in THIS batch; one
         # evaluation feeds both the state write and the rebuild
         new_lines = batch_first.join(seen, "_line", "left_anti").localCheckpoint()
@@ -142,24 +115,19 @@ def run_incremental_line_dedup(
                 ).alias("n_dropped"),
             )
         )
-        part = f"batch_id={batch_id}"
-        out.write.mode("overwrite").parquet(os.path.join(docs_dir, part))
+        write_batch(out, docs_dir, batch_id)
         state_rows = new_lines.select(
             F.col("_line").alias("line"),
             F.col("_id").alias("keep_doc_id"),
             F.col("_pos").alias("keep_pos"),
         )
         if not state_rows.isEmpty():  # never write a _SUCCESS-only partition
-            state_rows.write.mode("overwrite").parquet(
-                os.path.join(lines_dir, part)
-            )
+            write_batch(state_rows, lines_dir, batch_id)
 
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain(
+        json_stream(spark, input_path),
+        os.path.join(work_dir, "ckpt"),
+        process_batch,
     )
 
 
@@ -167,14 +135,14 @@ def read_deduped_docs(spark: SparkSession, work_dir: str) -> DataFrame:
     """All per-document outputs accumulated so far: (doc_id, text,
     n_lines, n_dropped) — the incremental twin of dedup_lines'
     return. Empty typed relation before the first drain."""
-    return _read_state(
-        spark, os.path.join(work_dir, "docs"), _DOCS_SCHEMA, None
+    return read_state_or_empty(
+        spark, os.path.join(work_dir, "docs"), _DOCS_SCHEMA
     )
 
 
 def read_line_state(spark: SparkSession, work_dir: str) -> DataFrame:
     """The kept-line state: (line, keep_doc_id, keep_pos). Empty typed
     relation before the first drain."""
-    return _read_state(
-        spark, os.path.join(work_dir, "lines"), _LINES_SCHEMA, None
+    return read_state_or_empty(
+        spark, os.path.join(work_dir, "lines"), _LINES_SCHEMA
     )

@@ -38,6 +38,7 @@ from ..functions.scalar import coerce_timestamp
 from ..operators.aggregates import daily_genre_kpis
 from ..operators.validation import validate_streams
 from ..plans.music import rank_and_project_kv
+from .state import drain, write_json
 
 # the reference's stream-file name filter (P8) and raw CSV layout
 STREAM_GLOB = "*stream*.csv"
@@ -130,34 +131,6 @@ def streaming_daily_kpis(
 
 def _hadoop_path(spark: SparkSession, path: str):
     return spark._jvm.org.apache.hadoop.fs.Path(path)
-
-
-def _write_audit_manifest(
-    spark: SparkSession, output_dir: str, batch_id: int, manifests: dict
-) -> None:
-    """Publish the per-batch write-audit manifests (the dicts
-    ``write_partitioned_audited`` collected via ``observe`` DURING each
-    sink write — zero extra scans) as ``audit/batch_<id>.json`` next to
-    the outputs, through the Hadoop FileSystem API so the publish works
-    on any scheme the session can write (the ``_delete_date_partitions``
-    convention, never a driver-local ``open``). Overwrite-by-batch-id
-    keeps at-least-once replays idempotent: a replayed batch rewrites
-    the identical manifest."""
-    import json
-
-    p = _hadoop_path(
-        spark, os.path.join(output_dir, "audit", f"batch_{batch_id}.json")
-    )
-    fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    out = fs.create(p, True)
-    try:
-        out.write(
-            bytearray(
-                json.dumps(manifests, default=str, sort_keys=True).encode()
-            )
-        )
-    finally:
-        out.close()
 
 
 def _delete_date_partitions(spark, base_dir: str, dates) -> None:
@@ -421,15 +394,17 @@ def run_incremental_pipeline(
                     kv_client_factory,
                     replace_pks=True,
                 )
-        _write_audit_manifest(spark, output_dir, batch_id, manifests)
+        # publish the manifests collected DURING the sink writes (zero
+        # extra scans) through the Hadoop FileSystem API;
+        # overwrite-by-batch-id keeps an at-least-once replay
+        # idempotent (it rewrites the identical manifest)
+        write_json(
+            spark,
+            os.path.join(output_dir, "audit", f"batch_{batch_id}.json"),
+            manifests,
+        )
 
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(stream, checkpoint_dir, process_batch)
 
 
 def incremental_new_files_batch(

@@ -45,6 +45,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .state import drain, json_stream, read_state_or_empty, write_batch
+
 VEC_SCHEMA = T.StructType(
     [
         T.StructField("vec_id", T.LongType()),
@@ -112,7 +114,6 @@ def run_incremental_semantic_dedup(
     work_dir: str,
     centroids: list[list[float]],
     threshold: float = 0.95,
-    schema: T.StructType | None = None,
 ) -> None:
     """Drain ``input_path`` (JSON-lines embedding files: vec_id,
     embedding) through the incremental leader index under ``work_dir``
@@ -120,18 +121,8 @@ def run_incremental_semantic_dedup(
     from ..operators.similarity import assign_centroid
 
     leaders_dir = os.path.join(work_dir, "leaders")
-    decisions_dir = os.path.join(work_dir, "decisions")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
-
-    stream = (
-        spark.readStream.schema(schema or VEC_SCHEMA)
-        .format("json")
-        .load(input_path)
-    )
 
     def read_leaders(before_batch: int, cells: list[int]) -> DataFrame:
-        from .state import read_state_or_empty
-
         empty = "vec_id long, embedding array<double>, centroid_id int"
         if not cells:
             return spark.createDataFrame([], empty)
@@ -166,9 +157,10 @@ def run_incremental_semantic_dedup(
             .applyInPandas(_leader_kernel(threshold), _KERNEL_SCHEMA)
             .localCheckpoint()  # one evaluation feeds both writes below
         )
-        part = f"batch_id={batch_id}"
-        decisions.drop("_lead").write.mode("overwrite").parquet(
-            os.path.join(decisions_dir, part)
+        write_batch(
+            decisions.drop("_lead"),
+            os.path.join(work_dir, "decisions"),
+            batch_id,
         )
         new_leaders = batch.join(
             decisions.filter("_lead").select("vec_id"), "vec_id"
@@ -182,12 +174,10 @@ def run_incremental_semantic_dedup(
         if not new_leaders.isEmpty():
             new_leaders.write.mode("overwrite").partitionBy(
                 "centroid_id"
-            ).parquet(os.path.join(leaders_dir, part))
+            ).parquet(os.path.join(leaders_dir, f"batch_id={batch_id}"))
 
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain(
+        json_stream(spark, input_path, VEC_SCHEMA),
+        os.path.join(work_dir, "ckpt"),
+        process_batch,
     )

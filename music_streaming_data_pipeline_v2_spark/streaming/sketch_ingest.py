@@ -39,14 +39,14 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-DOC_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("source", T.StringType()),
-    ]
+from .state import CellSpec, drain_cells, json_stream, pin_params
+
+CELLS = CellSpec(
+    "cells",
+    "depth_row int, bucket int, cell_count long",
+    ("depth_row", "bucket"),
+    "sum",
 )
 
 #: Sketch geometry fixed per state directory: cells from different
@@ -59,140 +59,74 @@ DOC_SCHEMA = T.StructType(
 DEFAULT_WIDTH, DEFAULT_DEPTH = 2048, 4
 
 
-def _check_geometry(
+def _pin_geometry(
     spark: SparkSession, work_dir: str, width: int, depth: int, write: bool
-) -> tuple[int, int]:
-    """Return the state directory's pinned (width, depth), pinning
-    ``(width, depth)`` if nothing is pinned yet (``write=True``) and
-    raising on any mismatch with an existing pin."""
+) -> None:
+    """Pin (or assert) the state's ``(width, depth)`` together with
+    the bucket-addressing version: state written before the version
+    column existed reads it as NULL (v1 = the 4-hex-digit addressing),
+    whose cells place the same key in different buckets than the
+    current arithmetic — refused like any other mismatch."""
     from ..operators.frequency import CM_ADDR_VERSION
-    from .state import read_state_or_empty
 
-    geo_dir = os.path.join(work_dir, "geometry")
-    # addr_version reads as NULL from state written before the column
-    # existed (v1 = the 4-hex-digit addressing) — those cells place the
-    # same key in different buckets than the current arithmetic, so
-    # merging would silently undercount; reject and rebuild instead
-    rows = read_state_or_empty(
-        spark, geo_dir, "width int, depth int, addr_version int"
-    ).collect()
-    if rows:
-        got = (rows[0]["width"], rows[0]["depth"])
-        ver = rows[0]["addr_version"] or 1
-        if ver != CM_ADDR_VERSION:
-            raise ValueError(
-                f"sketch state at {work_dir!r} was built with bucket-"
-                f"addressing v{ver}; this build uses "
-                f"v{CM_ADDR_VERSION} — cells are not mergeable across "
-                "addressing schemes, rebuild the state directory"
-            )
-        if (width, depth) != got:
-            raise ValueError(
-                f"sketch state at {work_dir!r} is pinned to "
-                f"width={got[0]} depth={got[1]}; got width={width} "
-                f"depth={depth} — cells from different geometries are "
-                "not mergeable"
-            )
-        return got
-    if write:
-        spark.createDataFrame(
-            [(int(width), int(depth), int(CM_ADDR_VERSION))],
-            "width int, depth int, addr_version int",
-        ).write.mode("overwrite").parquet(geo_dir)
-    return (width, depth)
+    pin_params(
+        spark,
+        os.path.join(work_dir, "geometry"),
+        "width int, depth int, addr_version int",
+        (int(width), int(depth), int(CM_ADDR_VERSION)),
+        write,
+    )
 
 
 def run_incremental_sketch(
     spark: SparkSession,
     input_path: str,
     work_dir: str,
-    schema: T.StructType | None = None,
-    text_col: str = "text",
     width: int = DEFAULT_WIDTH,
     depth: int = DEFAULT_DEPTH,
-    compact_after_drain: bool = False,
 ) -> None:
     """Drain ``input_path`` (JSON-lines doc files: doc_id, text,
     source) into the count-min cell state under ``work_dir`` (cells/,
-    ckpt/), sketching every lowercased whitespace token occurrence."""
-    cells_dir = os.path.join(work_dir, "cells")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
-    _check_geometry(spark, work_dir, width, depth, write=True)
+    ckpt/), sketching every lowercased whitespace token occurrence.
+    ``CELLS.compact`` folds the cell chain between drains."""
+    _pin_geometry(spark, work_dir, width, depth, write=True)
 
-    stream = (
-        spark.readStream.schema(schema or DOC_SCHEMA)
-        .format("json")
-        .load(input_path)
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def sketch_cells(batch_df: DataFrame) -> DataFrame:
         from ..operators.frequency import count_min_cells
         from ..operators.packing import engine_safe_tokens
 
-        if batch_df.isEmpty():
-            return
         toks = batch_df.select(
             F.explode(
-                F.transform(engine_safe_tokens(text_col), F.lower)
+                F.transform(engine_safe_tokens("text"), F.lower)
             ).alias("token")
         )
         # the SAME cell builder as the batch sketch (incremental ≡
         # batch by construction: md5 placements are content-addressed
         # and cells are additive)
-        cells = count_min_cells(toks, "token", width, depth)
-        cells.write.mode("overwrite").parquet(
-            os.path.join(cells_dir, f"batch_id={batch_id}")
-        )
+        return count_min_cells(toks, "token", width, depth)
 
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-    if compact_after_drain:
-        from .state import compact_additive_cells
-
-        compact_additive_cells(
-            spark,
-            cells_dir,
-            "depth_row int, bucket int, cell_count long",
-            key_cols=["depth_row", "bucket"],
-            sum_cols=["cell_count"],
-            ckpt_dir=ckpt_dir,
-        )
+    drain_cells(json_stream(spark, input_path), work_dir, sketch_cells, CELLS)
 
 
 def query_estimates(
     spark: SparkSession,
     work_dir: str,
     keys: DataFrame,
-    col: str = "token",
     width: int = DEFAULT_WIDTH,
     depth: int = DEFAULT_DEPTH,
 ) -> DataFrame:
-    """Point-frequency estimates for ``keys[col]`` over everything
+    """Point-frequency estimates for ``keys.token`` over everything
     drained so far — identical readout to the batch path
     (``count_min_estimate``), but over the cell-wise SUM of the stored
     per-batch sketches instead of a fresh corpus scan. Returns
-    ``(col, est_count)``. The state's pinned geometry is asserted
+    ``(token, est_count)``. The state's pinned geometry is asserted
     (probing a sketch with the wrong width/depth silently undercounts).
 
     Plan: one sum over the state (bounded by batches × depth × width
     rows), broadcast to the probe join — nothing re-reads raw text."""
     from ..operators.frequency import count_min_estimate
 
-    from .state import read_state_or_empty
-
-    width, depth = _check_geometry(spark, work_dir, width, depth, write=False)
-    state = read_state_or_empty(
-        spark,
-        os.path.join(work_dir, "cells"),
-        "depth_row int, bucket int, cell_count long",
+    _pin_geometry(spark, work_dir, width, depth, write=False)
+    return count_min_estimate(
+        keys, CELLS.merged(spark, work_dir), "token", width, depth
     )
-    merged = state.groupBy("depth_row", "bucket").agg(
-        F.sum("cell_count").alias("cell_count")
-    )
-    return count_min_estimate(keys, merged, col, width, depth)

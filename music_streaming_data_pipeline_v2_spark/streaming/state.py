@@ -1,10 +1,19 @@
-"""Shared batch-partitioned state access for the ingest indexes.
+"""The ingest-state protocol every incremental pipeline in this
+package shares: one drain, one per-batch commit, one state reader, one
+parameter pin, and the between-drains maintenance calls.
 
-Every incremental pipeline in this package stores its state the same
-way: parquet partitioned by ``batch_id=``, each batch OVERWRITING its
-own partition (at-least-once replays rewrite identical content). This
-module is the ONE reader for that layout:
-
+- **one drain** — ``drain`` is the only ``foreachBatch`` +
+  ``trigger(availableNow=True)`` chain: the file-source checkpoint
+  gives exactly-once per input file, ``foreachBatch`` is
+  at-least-once, so every write a batch makes must be
+  replay-idempotent.
+- **one commit** — state is parquet partitioned by ``batch_id=``, each
+  batch OVERWRITING its own partition (``write_batch``), so a replay
+  rewrites identical content.
+- **one cell spec** — the additive-cell families declare their state
+  once as a ``CellSpec`` (subdir, DDL, key columns, fold); the spec
+  owns the per-batch write with its empty-batch skip
+  (``drain_cells``), the merged readout and compaction.
 - **explicit schema, always** — state reads must never depend on data
   files existing; a batch that commits an empty partition (zero
   leaders, all-duplicate lines) leaves ``_SUCCESS`` only, and
@@ -15,6 +24,9 @@ module is the ONE reader for that layout:
   Hadoop-compatible filesystem (object stores at the 100 TB target)
   then silently reads as "nothing ingested yet". A PATH_NOT_FOUND from
   the reader is the legitimate empty case; everything else re-raises.
+  Metadata files (``read_json`` / ``write_json``) and existence probes
+  (``exists``) go through the Hadoop FileSystem API for the same
+  reason.
 - **partition-pruned recovery isolation** — ``before_batch`` excludes
   the CURRENT batch's partition, so a crashed prior attempt's partial
   write can never feed its own retry.
@@ -22,9 +34,208 @@ module is the ONE reader for that layout:
 
 from __future__ import annotations
 
+import json
+import os
+from dataclasses import dataclass
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+#: The JSON-lines document layout every doc-ingest family drains; a
+#: family that reads fewer fields simply ignores the rest (a field
+#: absent from the files reads as NULL).
+DOC_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("text", T.StringType()),
+        T.StructField("source", T.StringType()),
+    ]
+)
+
+
+def json_stream(
+    spark: SparkSession, input_path: str, schema: T.StructType = DOC_SCHEMA
+) -> DataFrame:
+    """File-source stream over the JSON-lines files under
+    ``input_path``, read with an explicit ``schema``."""
+    return spark.readStream.schema(schema).format("json").load(input_path)
+
+
+def drain(
+    stream: DataFrame,
+    ckpt_dir: str,
+    process_batch: Callable[[DataFrame, int], None],
+) -> None:
+    """Run ``process_batch(batch_df, batch_id)`` over everything
+    ``stream`` has available, then stop. ``ckpt_dir`` is the file
+    source's checkpoint: files already committed there are never
+    delivered again, and a batch that crashed before its commit is
+    replayed with the same ``batch_id``."""
+    (
+        stream.writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", ckpt_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def write_batch(df: DataFrame, state_dir: str, batch_id: int) -> None:
+    """Idempotent per-batch commit: ``df`` overwrites
+    ``state_dir/batch_id=<batch_id>`` wholesale (the batch id is the
+    partition directory, not a data column)."""
+    df.write.mode("overwrite").parquet(
+        os.path.join(state_dir, f"batch_id={batch_id}")
+    )
+
+
+def _ddl_columns(ddl: str) -> list[str]:
+    return [c.split()[0] for c in ddl.split(",")]
+
+
+@dataclass(frozen=True)
+class CellSpec:
+    """One additive cell relation under a family's ``work_dir``:
+    ``subdir`` holds one ``(keys…, values…)`` partition per batch
+    (``ddl`` declares the columns), and the state is the fold of all
+    partitions — every value column merged over ``keys`` by ``fold``
+    (``"sum"`` for counts, ``"max"`` for HLL registers, ``"min"`` for
+    MinHash slots). The fold is associative and commutative, so
+    merging at read time, compacting between drains and merging again
+    give the same readout."""
+
+    subdir: str
+    ddl: str
+    keys: tuple[str, ...]
+    fold: str
+
+    @property
+    def values(self) -> list[str]:
+        return [c for c in _ddl_columns(self.ddl) if c not in self.keys]
+
+    def path(self, work_dir: str) -> str:
+        return os.path.join(work_dir, self.subdir)
+
+    def read(self, spark: SparkSession, work_dir: str) -> DataFrame:
+        """Every committed cell row, un-merged (empty before the first
+        drain)."""
+        return read_state_or_empty(spark, self.path(work_dir), self.ddl)
+
+    def merged(self, spark: SparkSession, work_dir: str) -> DataFrame:
+        """The folded state: one row per key."""
+        fn = _FOLD_FNS[self.fold]
+        return (
+            self.read(spark, work_dir)
+            .groupBy(*self.keys)
+            .agg(*[fn(c).alias(c) for c in self.values])
+        )
+
+    def compact(self, spark: SparkSession, work_dir: str) -> list[int]:
+        """Between-drains maintenance: fold the partition chain into
+        its newest partition (``compact_additive_cells``; refused
+        while the family's checkpoint shows a batch in flight).
+        Returns the deleted batch ids."""
+        return compact_additive_cells(
+            spark,
+            self.path(work_dir),
+            self.ddl,
+            key_cols=list(self.keys),
+            sum_cols={c: self.fold for c in self.values},
+            ckpt_dir=os.path.join(work_dir, "ckpt"),
+        )
+
+
+def drain_cells(
+    stream: DataFrame,
+    work_dir: str,
+    build: Callable[[DataFrame], DataFrame | tuple[DataFrame, ...]],
+    *specs: CellSpec,
+) -> None:
+    """Drain ``stream`` into cell state: for each non-empty batch,
+    ``build(batch_df)`` returns one cell relation per spec (a bare
+    DataFrame for one spec), each committed with ``write_batch``. An
+    empty batch writes nothing. Checkpoint: ``work_dir/ckpt``."""
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        cells = build(batch_df)
+        if isinstance(cells, DataFrame):
+            cells = (cells,)
+        for spec, rel in zip(specs, cells):
+            write_batch(rel, spec.path(work_dir), batch_id)
+
+    drain(stream, os.path.join(work_dir, "ckpt"), process_batch)
+
+
+def _fs(spark: SparkSession, path: str):
+    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    return jvm_path.getFileSystem(hconf), jvm_path
+
+
+def exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists, asked through the Hadoop FileSystem
+    API (any scheme the session can read)."""
+    fs, p = _fs(spark, path)
+    return bool(fs.exists(p))
+
+
+def write_json(spark: SparkSession, path: str, obj) -> None:
+    """Write ``obj`` as one JSON document at ``path`` (overwriting)
+    through the Hadoop FileSystem API; parent directories are
+    created."""
+    fs, p = _fs(spark, path)
+    out = fs.create(p, True)
+    try:
+        out.write(
+            bytearray(json.dumps(obj, default=str, sort_keys=True).encode())
+        )
+    finally:
+        out.close()
+
+
+def read_json(spark: SparkSession, path: str):
+    """The JSON document at ``path``, or None when it does not exist
+    (Hadoop FileSystem API, the ``write_json`` twin)."""
+    fs, p = _fs(spark, path)
+    if not fs.exists(p):
+        return None
+    stream = fs.open(p)
+    try:
+        return json.loads(bytes(stream.readAllBytes()).decode())
+    finally:
+        stream.close()
+
+
+def pin_params(
+    spark: SparkSession, pin_dir: str, ddl: str, params: tuple, write: bool
+) -> None:
+    """Pin the parameters a state directory's cells were built under:
+    ``pin_dir`` holds a one-row parquet relation (columns ``ddl``).
+    A pinned record different from ``params`` raises — cells built
+    under different parameters are not mergeable — and with nothing
+    pinned yet, ``write=True`` pins ``params``. A column the record
+    predates reads as NULL and so never matches."""
+    rows = read_state_or_empty(spark, pin_dir, ddl).collect()
+    if rows:
+        got = tuple(rows[0])
+        if got != tuple(params):
+            names = _ddl_columns(ddl)
+            raise ValueError(
+                f"state at {pin_dir!r} is pinned to "
+                f"{dict(zip(names, got))}; this run uses "
+                f"{dict(zip(names, params))} — cells built under "
+                "different parameters are not mergeable, rebuild the "
+                "state directory"
+            )
+        return
+    if write:
+        spark.createDataFrame([tuple(params)], ddl).write.mode(
+            "overwrite"
+        ).parquet(pin_dir)
 
 
 def _with_batch_id(schema: str | T.StructType) -> str | T.StructType:
@@ -80,24 +291,9 @@ def prune_snapshots(
         raise ValueError("keep_latest must be >= 1")
     if ckpt_dir is not None:
         assert_quiesced(spark, ckpt_dir)
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(state_dir)
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = jvm_path.getFileSystem(hconf)
-    if not fs.exists(jvm_path):
-        return []
-    batches = []
-    for st in fs.listStatus(jvm_path):
-        name = st.getPath().getName()
-        if name.startswith("batch_id="):
-            try:
-                batches.append(int(name.split("=", 1)[1]))
-            except ValueError:
-                continue
-    doomed = sorted(batches)[:-keep_latest]
+    doomed = sorted(_batch_ids(spark, state_dir))[:-keep_latest]
     for b in doomed:
-        p = spark._jvm.org.apache.hadoop.fs.Path(
-            state_dir, f"batch_id={b}"
-        )
+        fs, p = _fs(spark, f"{state_dir}/batch_id={b}")
         fs.delete(p, True)
     return doomed
 
@@ -113,23 +309,29 @@ def latest_batch_id(
     restricts to partitions strictly older — the recovery-isolation
     view a replaying batch must use (a crashed prior attempt at the
     CURRENT batch may have left its own partition behind)."""
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(state_dir)
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = jvm_path.getFileSystem(hconf)
-    if not fs.exists(jvm_path):
-        return None
-    best = None
-    for st in fs.listStatus(jvm_path):
+    ids = [
+        b
+        for b in _batch_ids(spark, state_dir)
+        if before_batch is None or b < before_batch
+    ]
+    return max(ids, default=None)
+
+
+def _batch_ids(spark: SparkSession, state_dir: str) -> list[int]:
+    """The ``batch_id=`` partitions present under ``state_dir`` (FS
+    listing; empty when the directory is absent)."""
+    fs, p = _fs(spark, state_dir)
+    if not fs.exists(p):
+        return []
+    ids = []
+    for st in fs.listStatus(p):
         name = st.getPath().getName()
         if name.startswith("batch_id="):
             try:
-                b = int(name.split("=", 1)[1])
+                ids.append(int(name.split("=", 1)[1]))
             except ValueError:
                 continue
-            if before_batch is not None and b >= before_batch:
-                continue
-            best = b if best is None else max(best, b)
-    return best
+    return ids
 
 
 def read_resolved_labels(
@@ -172,12 +374,6 @@ def read_resolved_labels(
         )
     )
     return resolved, latest
-
-
-def _fs(spark: SparkSession, path: str):
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    return jvm_path.getFileSystem(hconf), jvm_path
 
 
 def assert_quiesced(spark: SparkSession, ckpt_dir: str) -> None:
@@ -269,16 +465,9 @@ def _heal_torn_compaction(spark: SparkSession, state_dir: str) -> None:
             healed = int(name.split("=", 1)[1])
     fs.delete(tmp_path, True)
     if healed is not None:
-        root = Path(state_dir)
-        for st in fs.listStatus(root):
-            name = st.getPath().getName()
-            if name.startswith("batch_id="):
-                try:
-                    b = int(name.split("=", 1)[1])
-                except ValueError:
-                    continue
-                if b < healed:
-                    fs.delete(st.getPath(), True)
+        for b in _batch_ids(spark, state_dir):
+            if b < healed:
+                fs.delete(Path(f"{state_dir}/batch_id={b}"), True)
 
 
 def compact_label_deltas(
@@ -334,10 +523,12 @@ def compact_additive_cells(
     newest partition, older partitions deleted. Cell addition is
     associative and exact (integer sums), so the folded state serves
     BIT-IDENTICAL readouts — the read-side twin of
-    ``compact_label_deltas``, for the 12 additive ingest families
-    (value/hist/psi/vocab/sketch/…) whose readout cost otherwise
-    grows with drain count: each query sums ALL ``batch_id=``
-    partitions, fine at 3 drains, linear pain at 10⁴⁻⁵ micro-batches.
+    ``compact_label_deltas``, for the 9 additive ingest families
+    (value/hist/psi/vocab/sketch/dsir/index = sum, hll = max,
+    overlap = min; each calls it through ``CellSpec.compact``) whose
+    readout cost otherwise grows with drain count: each query sums ALL
+    ``batch_id=`` partitions, fine at 3 drains, linear pain at 10⁴⁻⁵
+    micro-batches.
     Folding restores readout cost to the cell-space bound regardless
     of history length.
 

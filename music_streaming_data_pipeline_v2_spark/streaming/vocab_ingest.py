@@ -29,88 +29,33 @@ contract).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-DOC_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("source", T.StringType()),
-    ]
+from .state import CellSpec, drain_cells, json_stream
+
+CELLS = CellSpec(
+    "cells", "_tok string, _df long, _cnt long", ("_tok",), "sum"
 )
 
 
+def _vocab_cells(batch_df: DataFrame) -> DataFrame:
+    from ..operators.quality import vocab_cells
+
+    # the SAME cell builder as the batch audits (incremental ≡ batch
+    # by disjoint-document additivity)
+    return vocab_cells(batch_df, "text", "doc_id")
+
+
 def run_incremental_vocab(
-    spark: SparkSession,
-    input_path: str,
-    work_dir: str,
-    schema: T.StructType | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    compact_after_drain: bool = False,
+    spark: SparkSession, input_path: str, work_dir: str
 ) -> None:
     """Drain ``input_path`` (JSON-lines doc files: doc_id, text,
     source) into the vocabulary cell state under ``work_dir`` (cells/,
-    ckpt/). ``compact_after_drain=True`` folds the cell chain into the
-    newest partition (exact integer sums — identical readouts, cost
-    stops tracking drain count)."""
-    cells_dir = os.path.join(work_dir, "cells")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
-
-    stream = (
-        spark.readStream.schema(schema or DOC_SCHEMA)
-        .format("json")
-        .load(input_path)
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from ..operators.quality import vocab_cells
-
-        if batch_df.isEmpty():
-            return
-        # the SAME cell builder as the batch audits (incremental ≡
-        # batch by disjoint-document additivity)
-        cells = vocab_cells(batch_df, text_col, id_col)
-        cells.write.mode("overwrite").parquet(
-            os.path.join(cells_dir, f"batch_id={batch_id}")
-        )
-
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-    if compact_after_drain:
-        from .state import compact_additive_cells
-
-        compact_additive_cells(
-            spark,
-            cells_dir,
-            "_tok string, _df long, _cnt long",
-            key_cols=["_tok"],
-            sum_cols=["_df", "_cnt"],
-            ckpt_dir=ckpt_dir,
-        )
-
-
-def _merged_cells(spark: SparkSession, work_dir: str) -> DataFrame:
-    from .state import read_state_or_empty
-
-    state = read_state_or_empty(
-        spark,
-        os.path.join(work_dir, "cells"),
-        "_tok string, _df long, _cnt long",
-    )
-    return state.groupBy("_tok").agg(
-        F.sum("_df").alias("_df"), F.sum("_cnt").alias("_cnt")
-    )
+    ckpt/). ``CELLS.compact`` folds the cell chain between drains
+    (exact integer sums — identical readouts, cost stops tracking
+    drain count)."""
+    drain_cells(json_stream(spark, input_path), work_dir, _vocab_cells, CELLS)
 
 
 def query_vocabulary(
@@ -121,7 +66,7 @@ def query_vocabulary(
     all drained documents (the min-doc-freq filter applied to summed
     cells; exact by disjoint-document additivity)."""
     return (
-        _merged_cells(spark, work_dir)
+        CELLS.merged(spark, work_dir)
         .filter(F.col("_df") >= int(min_doc_freq))
         .select("_tok")
     )
@@ -137,7 +82,7 @@ def query_coverage_curve(
     from ..operators.quality import coverage_curve_from_counts
 
     return coverage_curve_from_counts(
-        _merged_cells(spark, work_dir).select("_tok", "_cnt"), sizes
+        CELLS.merged(spark, work_dir).select("_tok", "_cnt"), sizes
     )
 
 
@@ -155,7 +100,7 @@ def query_bpe_merges(
     tests/test_vocab_ingest.py pins the equivalence."""
     from ..operators.bpe import bpe_merges_from_freqs
 
-    freqs = _merged_cells(spark, work_dir).select(
+    freqs = CELLS.merged(spark, work_dir).select(
         F.col("_tok").alias("word"), F.col("_cnt").alias("freq")
     )
     return bpe_merges_from_freqs(freqs, k=k)[0]
@@ -177,7 +122,7 @@ def query_unigram_vocab(
     lowercased corpus — tests/test_vocab_ingest.py pins it."""
     from ..operators.unigram import unigram_train_from_words
 
-    freqs = _merged_cells(spark, work_dir).select(
+    freqs = CELLS.merged(spark, work_dir).select(
         F.col("_tok").alias("word"), F.col("_cnt").alias("freq")
     )
     return unigram_train_from_words(
@@ -199,4 +144,4 @@ def query_phrase_dfreq(spark: SparkSession, work_dir: str) -> DataFrame:
     only candidate fan-out — the join verifies every candidate
     exactly, so gate OUTPUT is invariant (pinned by
     tests/test_vocab_ingest.py::test_phrase_gate_from_state)."""
-    return _merged_cells(spark, work_dir).select("_tok", "_df")
+    return CELLS.merged(spark, work_dir).select("_tok", "_df")

@@ -37,14 +37,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-DOC_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-    ]
-)
+from .state import drain, json_stream, read_state_or_empty, write_batch
 
 
 def run_incremental_winnow(
@@ -53,35 +47,24 @@ def run_incremental_winnow(
     work_dir: str,
     k: int = 3,
     window: int = 4,
-    schema: T.StructType | None = None,
 ) -> None:
     """Drain ``input_path`` (JSON-lines doc files: doc_id, text) into
     the winnow postings state under ``work_dir`` (postings/, ckpt/)."""
     from ..operators.text import winnow_fingerprints
 
-    postings_dir = os.path.join(work_dir, "postings")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
-
-    stream = (
-        spark.readStream.schema(schema or DOC_SCHEMA)
-        .format("json")
-        .load(input_path)
-    )
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        sk = winnow_fingerprints(batch_df, k=k, window=window)
-        sk.write.mode("overwrite").parquet(
-            os.path.join(postings_dir, f"batch_id={batch_id}")
+        write_batch(
+            winnow_fingerprints(batch_df, k=k, window=window),
+            os.path.join(work_dir, "postings"),
+            batch_id,
         )
 
-    (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    drain(
+        json_stream(spark, input_path),
+        os.path.join(work_dir, "ckpt"),
+        process_batch,
     )
 
 
@@ -100,8 +83,6 @@ def query_overlap_pairs(
     one pair aggregate. Nothing re-reads text — at 100 TB the state is
     the (fp, doc) sketch relation, a bounded fraction of the corpus
     (≤ one row per kept window)."""
-    from .state import read_state_or_empty
-
     sk = read_state_or_empty(
         spark, os.path.join(work_dir, "postings"), "doc_id long, fp long"
     ).localCheckpoint(eager=True)  # both join sides read it

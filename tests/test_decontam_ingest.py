@@ -94,6 +94,30 @@ def test_double_init_refuses_and_missing_state_refuses(spark, tmp_path):
         )
 
 
+def test_state_meta_follows_uri_work_dir(spark, tmp_path, monkeypatch):
+    """The pinned meta lives under the work_dir URI itself, not under
+    the driver's working directory: a drain started from another cwd
+    finds it."""
+    inp = tmp_path / "in"
+    inp.mkdir()
+    work = (tmp_path / "work").as_uri()
+    first_cwd = tmp_path / "cwd_a"
+    first_cwd.mkdir()
+    monkeypatch.chdir(first_cwd)
+    init_decontam_state(spark, work, _df(spark, TEST_DOCS), n=N)
+    assert (tmp_path / "work" / "state_meta.json").exists()
+
+    other_cwd = tmp_path / "cwd_b"
+    other_cwd.mkdir()
+    monkeypatch.chdir(other_cwd)
+    _write_wave(inp / "w1.jsonl", WAVE1)
+    run_incremental_decontam(spark, str(inp), work)
+    want = _vals(ngram_contamination(_df(spark, TEST_DOCS), _df(spark, WAVE1), n=N))
+    assert _vals(query_contamination(spark, work)) == want
+    with pytest.raises(ValueError, match="already initialized"):
+        init_decontam_state(spark, work, _df(spark, TEST_DOCS), n=N)
+
+
 def test_incremental_cleaned_corpus_matches_batch(spark, tmp_path):
     """emit_cleaned drains land the EXCISED segment corpus; the union
     over waves ≡ remove_contaminated_spans over the concatenation

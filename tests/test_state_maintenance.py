@@ -19,6 +19,7 @@ from music_streaming_data_pipeline_v2_spark.streaming.state import (
     read_state_or_empty,
 )
 from music_streaming_data_pipeline_v2_spark.streaming.value_ingest import (
+    CELLS,
     query_mad_stats,
     query_value_quantiles,
     run_incremental_values,
@@ -92,7 +93,8 @@ def test_compact_additive_cells_identical_readout(spark, tmp_path):
         sum_cols=["cnt"],
     ) == []
     _write_wave(inp / "w3.jsonl", _mk_rows(rng, 5000, 40))
-    run_incremental_values(spark, str(inp), work, compact_after_drain=True)
+    run_incremental_values(spark, str(inp), work)
+    CELLS.compact(spark, work)
     assert _partitions(cells_dir) == ["batch_id=3"]
 
 
@@ -110,19 +112,44 @@ def test_compact_additive_cells_empty_state(spark, tmp_path):
 
 
 def test_hist_and_psi_compaction(spark, tmp_path):
-    from music_streaming_data_pipeline_v2_spark.streaming.hist_ingest import (
-        query_quantiles,
-        run_incremental_hist,
-    )
-    from music_streaming_data_pipeline_v2_spark.streaming.psi_ingest import (
-        query_psi,
-        run_incremental_psi,
+    from music_streaming_data_pipeline_v2_spark.streaming import (
+        hist_ingest,
+        psi_ingest,
+        sketch_ingest,
+        vocab_ingest,
     )
 
+    keys = spark.createDataFrame(
+        [(f"tok{i}",) for i in range(0, 60, 7)], "token string"
+    )
     rng = random.Random(17)
-    for fam, runner, query in (
-        ("hist", run_incremental_hist, None),
-        ("psi", run_incremental_psi, None),
+    for fam, runner, query, spec in (
+        (
+            "hist",
+            hist_ingest.run_incremental_hist,
+            lambda work: hist_ingest.query_quantiles(spark, work, [500, 900]),
+            hist_ingest.CELLS,
+        ),
+        (
+            "psi",
+            psi_ingest.run_incremental_psi,
+            lambda work: psi_ingest.query_psi(spark, work),
+            psi_ingest.CELLS,
+        ),
+        (
+            "vocab",
+            vocab_ingest.run_incremental_vocab,
+            lambda work: vocab_ingest.query_coverage_curve(
+                spark, work, [5, 20, 50]
+            ),
+            vocab_ingest.CELLS,
+        ),
+        (
+            "sketch",
+            sketch_ingest.run_incremental_sketch,
+            lambda work: sketch_ingest.query_estimates(spark, work, keys),
+            sketch_ingest.CELLS,
+        ),
     ):
         inp = tmp_path / f"{fam}_in"
         inp.mkdir()
@@ -144,32 +171,11 @@ def test_hist_and_psi_compaction(spark, tmp_path):
                         + "\n"
                     )
             runner(spark, str(inp), work)
-        if fam == "hist":
-            before = _vals(query_quantiles(spark, work, [500, 900]))
-        else:
-            before = _vals(query_psi(spark, work))
+        before = _vals(query(work))
         cells_dir = os.path.join(work, "cells")
         assert len(_partitions(cells_dir)) == 2
-        if fam == "hist":
-            compact_additive_cells(
-                spark,
-                cells_dir,
-                "value long, _cnt long",
-                key_cols=["value"],
-                sum_cols=["_cnt"],
-                ckpt_dir=os.path.join(work, "ckpt"),
-            )
-            after = _vals(query_quantiles(spark, work, [500, 900]))
-        else:
-            compact_additive_cells(
-                spark,
-                cells_dir,
-                "grp string, bin string, cnt long",
-                key_cols=["grp", "bin"],
-                sum_cols=["cnt"],
-                ckpt_dir=os.path.join(work, "ckpt"),
-            )
-            after = _vals(query_psi(spark, work))
+        spec.compact(spark, work)
+        after = _vals(query(work))
         assert len(_partitions(cells_dir)) == 1
         assert after == before
 
@@ -354,14 +360,15 @@ def test_fold_modes_max_min_distinct(spark, tmp_path):
 
 
 def test_hll_and_overlap_compaction_end_to_end(spark, tmp_path):
-    """The register/signature families fold through their drains'
-    compact_after_drain flag with readouts unchanged."""
+    """The register/signature families fold through their specs'
+    compaction with readouts unchanged."""
     import random
 
     from music_streaming_data_pipeline_v2_spark.streaming.hll_ingest import (
         query_cardinality,
         run_incremental_hll,
     )
+    from music_streaming_data_pipeline_v2_spark.streaming import overlap_ingest
     from music_streaming_data_pipeline_v2_spark.streaming.overlap_ingest import (
         query_overlap,
         run_incremental_overlap,
@@ -402,7 +409,7 @@ def test_hll_and_overlap_compaction_end_to_end(spark, tmp_path):
     assert len(_partitions(os.path.join(work, "registers"))) == 1
     assert _vals(query_cardinality(spark, work)) == before
 
-    # overlap: signature state folds by MIN through the drain flag
+    # overlap: signature state folds by MIN through its spec
     inp2 = tmp_path / "ov_in"
     inp2.mkdir()
     work2 = str(tmp_path / "ov_work")
@@ -428,7 +435,8 @@ def test_hll_and_overlap_compaction_end_to_end(spark, tmp_path):
             json.dumps({"doc_id": 999, "text": "t1 t2 t3 t4", "source": "s0"})
             + "\n"
         )
-    run_incremental_overlap(spark, str(inp2), work2, compact_after_drain=True)
+    run_incremental_overlap(spark, str(inp2), work2)
+    overlap_ingest.CELLS.compact(spark, work2)
     assert len(_partitions(os.path.join(work2, "cells"))) == 1
     after_full = _vals(query_overlap(spark, work2))
     # fold then drain again: readout still equals the re-derived one
@@ -438,9 +446,13 @@ def test_hll_and_overlap_compaction_end_to_end(spark, tmp_path):
 
 def test_dsir_and_index_compaction(spark, tmp_path):
     """The disjoint-arrival families (DSIR doc-bucket cells, BM25
-    postings/doclens) fold through compact_after_drain with readouts
+    postings/doclens) fold through their specs' compaction with readouts
     unchanged — the sum fold is content-identity there (no key repeats
     across batches), it only collapses the partition chain."""
+    from music_streaming_data_pipeline_v2_spark.streaming import (
+        dsir_ingest,
+        index_ingest,
+    )
     from music_streaming_data_pipeline_v2_spark.streaming.dsir_ingest import (
         query_dsir_scores,
         run_incremental_dsir,
@@ -477,13 +489,16 @@ def test_dsir_and_index_compaction(spark, tmp_path):
             before = _vals(query_dsir_scores(spark, work, target))
         else:
             before = _vals(query_index(spark, work, queries, k=5))
-        # one more (empty) drain with compaction enabled folds the chain
-        runner(spark, str(inp), work, compact_after_drain=True)
-        state_dirs = (
-            ["docbuckets"] if fam == "dsir" else ["postings", "doclens"]
+        # one more (empty) drain, then compaction folds the chain
+        runner(spark, str(inp), work)
+        specs = (
+            [dsir_ingest.DOCBUCKETS]
+            if fam == "dsir"
+            else [index_ingest.POSTINGS, index_ingest.DOCLENS]
         )
-        for sd in state_dirs:
-            assert len(_partitions(os.path.join(work, sd))) == 1, (fam, sd)
+        for spec in specs:
+            spec.compact(spark, work)
+            assert len(_partitions(spec.path(work))) == 1, (fam, spec.subdir)
         if fam == "dsir":
             after = _vals(query_dsir_scores(spark, work, target))
         else:

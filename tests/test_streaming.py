@@ -840,6 +840,31 @@ def test_incremental_dedup_rejects_incompatible_state(spark, tmp_path):
         run_incremental_dedup(spark, str(inp), str(work), num_hashes=16, bands=8)
 
 
+def test_incremental_dedup_meta_follows_uri_work_dir(spark, tmp_path, monkeypatch):
+    """The parameter guard reads and writes its meta under the
+    work_dir URI, not relative to the driver's cwd: a rerun from
+    another cwd with different hash parameters is still refused."""
+    from music_streaming_data_pipeline_v2_spark.streaming import (
+        run_incremental_dedup,
+    )
+
+    inp = tmp_path / "in"
+    inp.mkdir()
+    (inp / "d.csv").write_text("doc_id,lang,text\n1,en,alpha beta gamma delta\n")
+    work = (tmp_path / "work").as_uri()
+    first_cwd = tmp_path / "cwd_a"
+    first_cwd.mkdir()
+    monkeypatch.chdir(first_cwd)
+    run_incremental_dedup(spark, str(inp), work, num_hashes=16, bands=8)
+    assert (tmp_path / "work" / "state_meta.json").exists()
+
+    other_cwd = tmp_path / "cwd_b"
+    other_cwd.mkdir()
+    monkeypatch.chdir(other_cwd)
+    with pytest.raises(ValueError, match="incompatible dedup-index state"):
+        run_incremental_dedup(spark, str(inp), work, num_hashes=32, bands=8)
+
+
 def test_replayed_batch_does_not_duplicate_state(spark, dims, tmp_path):
     """foreachBatch is at-least-once: deleting the checkpoint's commit
     marker for the last batch and re-running replays it. The replay

@@ -38,10 +38,8 @@ from music_streaming_data_pipeline_v2_spark.session import get_spark
 def main() -> None:
     from pyspark.sql import functions as F
 
-    from music_streaming_data_pipeline_v2_spark.streaming.state import (
-        compact_additive_cells,
-    )
     from music_streaming_data_pipeline_v2_spark.streaming.value_ingest import (
+        CELLS,
         query_mad_stats,
     )
 
@@ -52,7 +50,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     root = tempfile.mkdtemp(prefix="probe_compact_")
     work = os.path.join(root, "work")
-    cells_dir = os.path.join(work, "cells")
+    cells_dir = CELLS.path(work)
 
     # one batch's cell relation: every (grp, centi-value) pair with a
     # small count — the shape a value_ingest drain writes
@@ -91,13 +89,7 @@ def main() -> None:
         print(f"| {mark} | {round(min(ts), 3)} |", flush=True)
 
     t0 = time.monotonic()
-    compact_additive_cells(
-        spark,
-        cells_dir,
-        "grp string, v long, cnt long",
-        key_cols=["grp", "v"],
-        sum_cols=["cnt"],
-    )
+    CELLS.compact(spark, work)
     fold_s = round(time.monotonic() - t0, 3)
     time.sleep(10)  # let the fold's GC/page-cache churn settle
     ts = []
